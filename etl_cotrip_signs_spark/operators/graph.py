@@ -6,20 +6,22 @@ thing a dedup pipeline actually keeps is one canonical document per
 CLUSTER, which is exactly connected components on the pair graph
 (transitive closure: A~B, B~C ⇒ {A,B,C} dedup to one survivor).
 
-Implementation: iterative min-label propagation on DataFrames. Each round
-is one shuffle (edges ⋈ labels on the node key + a min-agg); the loop
-early-exits when no label changes. Rounds needed = graph diameter — for
-dedup graphs that is small (clusters are near-cliques: every member pairs
-with most others), so the simple propagation beats the large-star/
-small-star dance in both clarity and constant factors. Lineage is cut with
-``localCheckpoint`` per round so the plan does not grow with iterations
-(the driver-loop pattern; no persist() — see operators/dedup.py).
+Implementation: one connected-components loop, ``connected_components``,
+for every caller. Each round is min-label propagation (one union +
+groupBy-min over edges ⋈ labels, checkpointed with ``localCheckpoint`` so
+the plan does not grow with iterations) followed by one pointer jump
+(component ← component(component), a window over the checkpointed round,
+itself checkpointed).
+The jump halves id-ordered label chains, so a long path converges in
+O(log n) rounds instead of one round per hop; rounds never exceed
+diameter + 1. The loop exits when a round changes no label (the driver-loop
+pattern; no persist() — see operators/dedup.py).
 
 At 100 TB: the label table is (node, label) — two longs per document —
 and the edge table is only the near-dup pairs (orders of magnitude smaller
 than the corpus). Both shuffle on node id, an unskewed high-cardinality
-key. The convergence count() per round is a cheap job over the label
-table; with a known diameter bound the check can be run every k rounds.
+key. The convergence count per round is a cheap job over the checkpointed
+label table.
 """
 
 from __future__ import annotations
@@ -32,21 +34,28 @@ from ..registry import query
 from .dedup import NGRAM_PAIRS_ORACLE, dedup_ngram_jaccard
 
 
+# Round cap shared by every connected-components caller. Min-label rounds
+# with one pointer jump each converge in at most diameter + 1 rounds, and
+# far fewer on long id-ordered chains (a 64-node path takes 7).
+CC_MAX_ROUNDS = 64
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "node",
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iter: int = 20,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Min-label propagation: returns (node, component) where component is
-    the smallest node id reachable from the node (undirected).
+    """Min-label propagation with pointer jumping: returns (node, component)
+    where component is the smallest node id reachable from the node
+    (undirected).
 
-    ``nodes`` may include isolated vertices (they keep their own id).
-    Raises if the graph has not converged after ``max_iter`` rounds —
-    a diameter that large means the input is not a dedup pair graph.
+    ``nodes`` may include isolated vertices (they keep their own id). Every
+    edge endpoint must be in ``nodes``; a missing one raises ``ValueError``.
+    Raises ``RuntimeError`` if the labels have not converged after
+    ``CC_MAX_ROUNDS`` rounds.
 
     ``num_partitions`` sizes the per-round shuffles. The label/edge tables
     are usually orders of magnitude smaller than the corpus, so inheriting
@@ -65,22 +74,14 @@ def connected_components(
         labels_init = labels_init.repartition(num_partitions, "node")
     sym = sym.distinct().localCheckpoint(eager=True)
     labels = labels_init.localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        # One aggregate per round (r11, guide §2.4): min over {own label} ∪
-        # {s-neighbors' labels} — algebraically identical to the old
-        # two-join form (join + groupBy-min + left-join + least), but each
-        # round is a single union + groupBy instead of two joins, dropping
-        # one join and one exchange per round. The self row is tagged so the
-        # SAME aggregate carries the previous label out (exactly one own=1
-        # row per node), making the convergence check a cheap filter-count
-        # over the checkpointed output with no join back to the old labels.
-        # Edge endpoints must be ⊆ nodes (all callers build the node list
-        # from the edge list or a superset); the old left-join form silently
-        # dropped unknown endpoints, the union form would add them.
-        self_rows = labels.select(
-            "node", "component", F.lit(1).alias("own")
-        )
-        propagated = sym.join(labels, sym.s == labels.node).select(
+    for _ in range(CC_MAX_ROUNDS):
+        # One aggregate per round: min over {own label} ∪ {neighbors'
+        # labels}. The self row is tagged so the same aggregate carries the
+        # previous label out (one own=1 row per node). The left join gives
+        # every endpoint d a row even when s has no label, so an endpoint
+        # missing from `nodes` shows up as a NULL prev_component.
+        self_rows = labels.select("node", "component", F.lit(1).alias("own"))
+        propagated = sym.join(labels, sym.s == labels.node, "left").select(
             F.col("d").alias("node"), F.col("component"), F.lit(0).alias("own")
         )
         proposed = (
@@ -94,14 +95,47 @@ def connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        changed = proposed.filter(
-            F.col("component") != F.col("prev_component")
-        ).count()
-        labels = proposed.select("node", "component")
-        if changed == 0:
-            return labels
+        counts = proposed.agg(
+            F.count(
+                F.when(F.col("component") != F.col("prev_component"), 1)
+            ).alias("changed"),
+            F.count(F.when(F.col("prev_component").isNull(), 1)).alias("missing"),
+        ).first()
+        if counts["missing"]:
+            raise ValueError(
+                "connected_components requires every edge endpoint to be in "
+                f"nodes; {counts['missing']} endpoint(s) are missing"
+            )
+        if counts["changed"] == 0:
+            return proposed.select("node", "component")
+        # Pointer jump, component <- component(component). Each node is
+        # listed under its label as a pointer and under its own id as a
+        # target carrying its label; a max over each key hands the target's
+        # label to every pointer. Every label is a node id, so every pointer
+        # finds its target. This is a self-join written as a window because
+        # Spark estimates a join's size as the product of its inputs and a
+        # checkpoint keeps that estimate: a self-join would square it every
+        # round, and planning time would double per round after ~15 rounds.
+        pointers = proposed.select(
+            F.col("component").alias("key"), "node", F.lit(False).alias("target")
+        ).unionAll(
+            proposed.select(
+                F.col("node").alias("key"),
+                F.col("component").alias("node"),
+                F.lit(True).alias("target"),
+            )
+        )
+        jumped = F.max(F.when(F.col("target"), F.col("node"))).over(
+            Window.partitionBy("key")
+        )
+        labels = (
+            pointers.select("node", "target", jumped.alias("component"))
+            .filter(~F.col("target"))
+            .drop("target")
+            .localCheckpoint(eager=True)
+        )
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
+        f"connected_components did not converge in {CC_MAX_ROUNDS} rounds"
     )
 
 
@@ -987,7 +1021,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each recursive step is one (frontier join edges) shuffle;
     the depth cap bounds path enumeration at degree^4 — the honest form
     for radius-limited queries. For unbounded reachability the engine's
-    iterative operators (connected_components' min-label rounds,
+    iterative operators (connected_components' pointer-jumping rounds,
     hierarchy_closure_doubling's pointer doubling) are the scale path:
     they carry O(nodes) state instead of path multisets."""
     from .text import fuzzy_join_del1
@@ -1106,58 +1140,6 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def hashmin_jump_components(
-    nodes: DataFrame, pairs: DataFrame, max_rounds: int = 64
-) -> DataFrame:
-    """Hash-to-min + pointer-jumping CC loop over (node) / (name_a, name_b)
-    frames; returns (node, lbl). Labels are node values, fixpoint = the
-    component's min node — unique, so results are round-count-independent.
-    Each round is eagerly checkpointed; the per-round driver action is a
-    metadata-scale changed-count. Shared by graph_components_hashmin_jump
-    and the Borůvka MSF contraction step."""
-    sym = pairs.select(
-        F.col("name_a").alias("s"), F.col("name_b").alias("d")
-    ).union(pairs.select(F.col("name_b").alias("s"), F.col("name_a").alias("d")))
-    lbl = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint(
-        eager=True
-    )
-    for _round in range(max_rounds):
-        nbr = sym.join(lbl, sym.s == lbl.node).select(
-            F.col("d").alias("node"), F.col("lbl")
-        )
-        cand = (
-            lbl.select("node", "lbl")
-            .union(nbr)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl1"))
-        )
-        # Pointer jump: follow the label's own label. Labels are always
-        # node values (min over a set of nodes), so the lookup join always
-        # matches; coalesce is a pure-defense guard.
-        jump = cand.select(
-            F.col("node").alias("lbl1"), F.col("lbl1").alias("lbl2")
-        )
-        new_lbl = (
-            cand.join(jump, "lbl1", "left")
-            .select("node", F.coalesce("lbl2", "lbl1").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_lbl.alias("n")
-            .join(lbl.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        lbl = new_lbl
-        if changed == 0:
-            break
-    else:  # pragma: no cover - stall guard, same policy as hierarchy op
-        raise RuntimeError(
-            "hash-to-min CC failed to converge — label graph is not shrinking"
-        )
-    return lbl
-
-
 @query(
     "graph_components_hashmin_jump",
     # Same unique fixpoint as any CC algorithm — every node labeled with
@@ -1176,23 +1158,18 @@ def hashmin_jump_components(
     """,
 )
 def graph_components_hashmin_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via hash-to-min + POINTER JUMPING (the
-    published O(log n)-round MapReduce CC family, Rastogi et al. 2012 /
-    Kiveris et al. 2014) — the algorithmic complement to the O(diameter)
-    min-label propagation in ``connected_components``: each round every
-    node takes the min label over its neighborhood AND THEN jumps through
-    its label's own label (lbl(v) <- lbl(lbl(v))), so label chains halve
-    per round.
+    """Connected components of the edit-distance-1 name graph: every
+    customer name labeled with its component's MIN name.
 
-    The del1 name graph is exactly the case that justifies it: the
-    fixture's digit-serial names chain transitively into ONE component of
-    every name (the high-diameter over-merge entity_resolution's blocking
-    exists to prevent) — min-label alone would need ~n rounds here;
-    hash-to-min + jumping converges in ~log2(n). The fixpoint (component
-    = min name) is unique, so the result is independent of the round
-    count and both engines agree regardless of convergence path. Rounds
-    iterate over the edge-incident label table only (eagerly checkpointed
-    per round, metadata-scale driver check per round)."""
+    The del1 name graph is the high-diameter case for ``connected_components``:
+    the fixture's digit-serial names chain transitively into ONE component
+    of every name (the over-merge entity_resolution's blocking exists to
+    prevent). Min-label propagation alone needs one round per hop here;
+    its pointer jump (lbl(v) <- lbl(lbl(v)), the O(log n)-round MapReduce
+    CC family of Rastogi et al. 2012 / Kiveris et al. 2014) halves label
+    chains per round. The fixpoint (component = min name) is unique, so
+    the result does not depend on the round count and both engines agree
+    regardless of convergence path."""
     from .text import fuzzy_join_del1
 
     names = (
@@ -1205,8 +1182,8 @@ def graph_components_hashmin_jump(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("name_a", "name_b")
         .localCheckpoint(eager=True)
     )
-    lbl = hashmin_jump_components(names, pairs)
-    return lbl.select(F.col("node").alias("name"), F.col("lbl").alias("component"))
+    labels = connected_components(names, pairs, src_col="name_a", dst_col="name_b")
+    return labels.select(F.col("node").alias("name"), "component")
 
 
 # Spanning-forest probe graph: a deterministic 1/23 subset of the geo point
@@ -1282,8 +1259,9 @@ def graph_minimum_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame
     algorithm: every component claims its minimum outgoing edge under the
     strict total order (weight, u, v), claimed edges join the forest, and
     components contract; components at least halve per round, so O(log n)
-    rounds regardless of diameter). Contraction reuses the hash-to-min +
-    pointer-jumping CC helper over the accumulated forest.
+    rounds regardless of diameter). Contraction runs
+    ``connected_components`` over the component graph of the claimed
+    edges.
 
     Graph: the deterministic md5 point cloud (1/23 orderkey subset),
     edges = pairs within radius 5000 milli-units with exact integer
@@ -1295,7 +1273,8 @@ def graph_minimum_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: per round, the min-outgoing-edge pick is one combinable
     min-struct aggregate over the live edge list; the edge list shrinks
     as components merge (intra-component edges drop out); contraction is
-    the O(log n) CC loop. Everything is eagerly checkpointed per round."""
+    ``connected_components``. Everything is eagerly checkpointed per
+    round."""
     edges = _msf_weighted_edges(spark, sf_dir).localCheckpoint(eager=True)
     nodes = (
         _msf_points(spark, sf_dir)
@@ -1342,12 +1321,9 @@ def graph_minimum_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame
             eager=True
         )
         lbl_nodes = comp.select(F.col("lbl").alias("node")).distinct()
-        relab = hashmin_jump_components(
-            lbl_nodes,
-            chosen.select(
-                F.col("cu").alias("name_a"), F.col("cv").alias("name_b")
-            ),
-        ).withColumnsRenamed({"node": "old_lbl", "lbl": "new_lbl"})
+        relab = connected_components(
+            lbl_nodes, chosen, src_col="cu", dst_col="cv"
+        ).withColumnsRenamed({"node": "old_lbl", "component": "new_lbl"})
         comp = (
             comp.join(relab, comp.lbl == relab.old_lbl)
             .select("node", F.col("new_lbl").alias("lbl"))

@@ -767,7 +767,7 @@ def fuzzy_join_del1(spark: SparkSession, sf_dir: str) -> DataFrame:
     true-ish candidates, not by n².
 
     The pair set is the shared input of the name-graph family (k-core,
-    both link predictors, hash-to-min components, entity resolution), so
+    both link predictors, connected components, entity resolution), so
     it participates in the sweep's opt-in stage cache
     (session.staged_intermediate; OFF by default).
     """
@@ -860,8 +860,9 @@ def entity_resolution_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2) fuzzy match within blocks via the FastSS deletion-neighborhood
     key (fuzzy_join_del1's algorithm with the block id appended to the
     equi-join key — still never n²);
-    (3) transitive closure into entities via min-label connected
-    components (graph.connected_components, string labels);
+    (3) transitive closure into entities via connected components
+    (graph.connected_components: min-label rounds with pointer
+    jumping, string labels);
     (4) survivorship (max name = "latest wins") + a cluster-size
     profile readout.
 

@@ -5,20 +5,26 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from etl_cotrip_signs_spark.operators import graph
 from etl_cotrip_signs_spark.operators.graph import connected_components
 
 
-def _cc(spark, nodes, edges, **kw):
+def _cc(spark, nodes, edges):
     ndf = spark.createDataFrame([(n,) for n in nodes], "node bigint")
     edf = spark.createDataFrame(edges, "src bigint, dst bigint")
-    out = connected_components(ndf, edf, **kw)
+    out = connected_components(ndf, edf)
     return dict(out.collect())
 
 
-def test_chain_converges_to_min_label(spark):
+def test_chain_converges_to_min_label(spark, monkeypatch):
     # 1-2-3-4-5 chain: diameter 4 forces several propagation rounds.
     got = _cc(spark, [1, 2, 3, 4, 5], [(1, 2), (2, 3), (3, 4), (4, 5)])
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
+    # A 64-node path in id order converges in 7 rounds with the pointer
+    # jump; min-label propagation alone would need 64.
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 8)
+    path = list(range(1, 65))
+    assert _cc(spark, path, list(zip(path, path[1:]))) == dict.fromkeys(path, 1)
 
 
 def test_two_components_and_singletons(spark):
@@ -35,9 +41,16 @@ def test_cycle_and_duplicate_edges(spark):
     assert got == {7: 7, 8: 7, 9: 7}
 
 
-def test_max_iter_raises_before_convergence(spark):
+def test_max_iter_raises_before_convergence(spark, monkeypatch):
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        _cc(spark, [1, 2, 3, 4, 5], [(1, 2), (2, 3), (3, 4), (4, 5)], max_iter=1)
+        _cc(spark, [1, 2, 3, 4, 5], [(1, 2), (2, 3), (3, 4), (4, 5)])
+
+
+def test_endpoint_missing_from_nodes_raises(spark):
+    # Node 3 is an edge endpoint but not in `nodes`.
+    with pytest.raises(ValueError, match="every edge endpoint to be in nodes"):
+        _cc(spark, [1, 2], [(1, 2), (2, 3)])
 
 
 def test_empty_edges_all_singletons(spark):
@@ -71,27 +84,57 @@ def _union_find_reference(nodes, edges):
 
 def test_random_graphs_match_union_find(spark):
     """Randomized graphs (no hypothesis engine: one Spark job per example
-    is slow, so a fixed seed drives a handful of diverse shapes)."""
+    is slow, so a fixed seed drives a handful of diverse shapes), plus a
+    64-node path in id order and the same path over shuffled ids."""
     import random
 
     rng = random.Random(7)
-    for trial in range(4):
+    cases = []
+    for _ in range(4):
         n = rng.randint(1, 25)
         nodes = list(range(1, n + 1))
         n_edges = rng.randint(0, 2 * n)
         edges = [
             (rng.choice(nodes), rng.choice(nodes)) for _ in range(n_edges)
         ]
-        edges = [(a, b) for a, b in edges if a != b]
+        cases.append((nodes, [(a, b) for a, b in edges if a != b]))
+    path = list(range(1, 65))
+    shuffled = path[:]
+    rng.shuffle(shuffled)
+    cases.append((path, list(zip(path, path[1:]))))
+    cases.append((path, list(zip(shuffled, shuffled[1:]))))
+    for nodes, edges in cases:
         want = _union_find_reference(nodes, edges)
-        got = _cc(spark, nodes, edges or [], max_iter=30) if edges else dict(
-            (r["node"], r["component"])
-            for r in connected_components(
-                spark.createDataFrame([(x,) for x in nodes], "node bigint"),
-                spark.createDataFrame([], "src bigint, dst bigint"),
-            ).collect()
-        )
-        assert got == want, f"trial {trial}: n={n} edges={edges}"
+        got = _cc(spark, nodes, edges)
+        assert got == want, f"n={len(nodes)} edges={edges}"
+
+
+def test_dedup_components_match_union_find(spark):
+    """Default-lane CC parity for dedup_components_ngram: its components
+    equal a union-find over dedup_ngram_jaccard's pairs (whose own oracle
+    parity runs in this lane too)."""
+    import duckdb
+
+    from etl_cotrip_signs_spark.operators.dedup import dedup_ngram_jaccard
+
+    from .conftest import SF_SMALL
+
+    docs = [
+        d
+        for (d,) in duckdb.sql(
+            f"SELECT doc_id FROM '{SF_SMALL}/documents.parquet'"
+        ).fetchall()
+    ]
+    pairs = [
+        (r["doc_a"], r["doc_b"])
+        for r in dedup_ngram_jaccard(spark, SF_SMALL).collect()
+    ]
+    assert pairs, "fixture should hold near-duplicate pairs"
+    got = {
+        r["doc_id"]: r["component"]
+        for r in graph.dedup_components_ngram(spark, SF_SMALL).collect()
+    }
+    assert got == _union_find_reference(docs, pairs)
 
 
 def test_pagerank_mass_conservation_and_hub(spark):
@@ -218,7 +261,6 @@ def test_msf_is_a_spanning_forest(spark):
     nodes| − |components of the radius graph| — and every forest edge is
     an input edge."""
     from etl_cotrip_signs_spark import registry
-    from etl_cotrip_signs_spark.operators.graph import hashmin_jump_components
 
     registry.load_all()
     from .conftest import SF_SMALL
