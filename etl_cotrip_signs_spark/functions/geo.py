@@ -6,7 +6,7 @@ string)`` — compact JSON, ragged-depth safe (operators/signs.py). WKT is
 the interchange encoding most geo tooling expects, so the engine provides
 a vectorized converter. JSON→WKT is structural re-formatting of the ragged
 arrays, which builtin expressions can't traverse — a Pandas UDF is the
-honest tool (same tier as the A3 split kernel).
+honest tool.
 """
 
 from __future__ import annotations

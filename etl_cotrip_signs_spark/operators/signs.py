@@ -5,8 +5,8 @@ where ``coordinates`` is compact JSON — this sidesteps GeoJSON's ragged array
 nesting (Point ``[x,y]`` vs MultiPolygon ``[[[[x,y]…]…]…]``) which has no
 single Spark array type. Geometry stays an opaque, cheap-to-move string;
 the only structural operation the reference performs on it is peeling one
-nesting level off ``Multi*`` (``/root/reference/task.ts:86-101``), which we
-implement as a vectorized top-level JSON split + ``posexplode``.
+nesting level off ``Multi*`` (``task.ts:86-101``), which we implement as
+Spark's own JSON parser (``from_json`` to ``array<string>``) + ``posexplode``.
 
 Feature schema: ``id string, geom_type string, coordinates string,
 properties map<string,string>``.
@@ -14,28 +14,7 @@ properties map<string,string>``.
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def json_top_level_split(coords: pd.Series) -> pd.Series:
-    """Split a JSON array string into its top-level elements (as JSON strings).
-
-    The A3 kernel: ``"[[1,2],[3,4]]"`` → ``["[1,2]", "[3,4]"]``. Arrow-batched
-    (vectorized transfer); per-element work is one json parse + dump, the
-    same cost profile as the reference's stringify/parse clone
-    (task.ts:87,92) but batched and distributed.
-    """
-
-    def split(v: str | None) -> list[str] | None:
-        if v is None:
-            return None
-        return [json.dumps(x, separators=(",", ":")) for x in json.loads(v)]
-
-    return coords.map(split)
+from pyspark.sql import DataFrame, functions as F
 
 
 def project_features(df: DataFrame) -> DataFrame:
@@ -64,11 +43,19 @@ def explode_multi(df: DataFrame) -> DataFrame:
     - empty-coordinates Multi → zero rows (the reference's loop body never
       runs; posexplode of an empty array emits nothing).
     - non-Multi rows pass through unchanged.
+
+    Members come from ``from_json(coordinates, 'array<string>')``: each
+    top-level element as compact JSON text, written by the same serializer
+    that produced ``coordinates`` (sources/geojson.py), so a member's text
+    equals that of the single geometry with the same values. ``FAILFAST``
+    raises ``MALFORMED_RECORD_IN_PARSING`` on coordinates that are not a
+    JSON array instead of dropping the row.
     """
     is_multi = F.col("geom_type").startswith("Multi")
-    members = F.when(is_multi, json_top_level_split(F.col("coordinates"))).otherwise(
-        F.array(F.col("coordinates"))
-    )
+    members = F.when(
+        is_multi,
+        F.from_json(F.col("coordinates"), "array<string>", {"mode": "FAILFAST"}),
+    ).otherwise(F.array(F.col("coordinates")))
     other_cols = [c for c in df.columns if c not in ("geom_type", "coordinates", "id")]
     exploded = df.select(
         "id",

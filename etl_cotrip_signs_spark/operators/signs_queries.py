@@ -82,10 +82,13 @@ def signs_pipeline_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB's JSON reader replays the same page fixtures the REST source
 # paginates through (the 0→4→7→'None' chain covers every page file, so
 # a glob over the directory sees the identical feature set), then
-# replicates A2→A3→A5 in SQL. Coordinate strings match because both
-# sides emit compact JSON (json.dumps(separators=(",",":")) vs DuckDB's
-# minified json_extract). Shared by the batch and streaming REST queries —
-# the stream drains the same chain, one page per micro-batch.
+# replicates A2→A3→A5 in SQL. Coordinate strings match because every
+# writer involved emits compact JSON and prints the fixtures' plain
+# decimals the same way: Spark's JSON writer (features_to_df and the
+# from_json Multi split), json.dumps (the DataSource and UDTF readers and
+# the sink read-back) and DuckDB's minified json_extract. Shared by the
+# batch and streaming REST queries — the stream drains the same chain,
+# one page per micro-batch.
 _REST_PIPELINE_ORACLE = f"""
     WITH pages AS (
         SELECT unnest(features) AS feat
@@ -134,13 +137,11 @@ def signs_rest_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 as a STREAM: `readStream.format("rest_signs")` pages through the
     chain with the page offset as checkpointed stream progress
     (sources/rest.py::RestSignsStreamReader), then the same A2→A3→A5
-    transform runs per micro-batch. Falls back to the batch path if the
-    Python DataSource API is unavailable."""
+    transform runs per micro-batch."""
     from ..sources.rest import register_rest_source
     from ..streaming.queries import run_to_completion
 
-    if not register_rest_source(spark):  # pragma: no cover - old Spark
-        return signs_rest_pipeline(spark, sf_dir)
+    register_rest_source(spark)
     stream = (
         spark.readStream.format("rest_signs")
         .option("transport", "file")
@@ -403,14 +404,12 @@ def signs_datasource_writer_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..session import scratch_dir
-    from ..sinks.http import HAS_DATASOURCE_WRITER, SignsSinkDataSource
+    from ..sinks.http import SignsSinkDataSource
 
     out = signs_pipeline(
         read_signs(spark, file_fetcher(_PAGES_DIR)),
         ["Point", "LineString", "Polygon"],
     )
-    if not HAS_DATASOURCE_WRITER:  # pragma: no cover - old Spark
-        return out.select("id", "geom_type", "coordinates")
     sink_dir = scratch_dir("signs_sink", sf_dir)
     shutil.rmtree(sink_dir, ignore_errors=True)
     spark.dataSource.register(SignsSinkDataSource)

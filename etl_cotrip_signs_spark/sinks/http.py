@@ -15,10 +15,14 @@ network egress).
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterator
+import os
+import uuid
+from collections.abc import Callable, Iterable, Iterator
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
 Poster = Callable[[str, dict[str, Any]], None]
 
@@ -54,6 +58,19 @@ def rows_to_feature_collection(rows: list[Any]) -> dict[str, Any]:
     return {"type": "FeatureCollection", "features": feats}
 
 
+def feature_collections(rows: Iterable[Any], batch_size: int) -> Iterator[dict[str, Any]]:
+    """Bounded FeatureCollection batches of at most ``batch_size`` rows, in
+    row order — the one batching loop behind both executor-side sinks."""
+    batch: list[Any] = []
+    for row in rows:
+        batch.append(row)
+        if len(batch) >= batch_size:
+            yield rows_to_feature_collection(batch)
+            batch = []
+    if batch:
+        yield rows_to_feature_collection(batch)
+
+
 def http_batch_sink(
     df: DataFrame,
     url: str,
@@ -64,14 +81,8 @@ def http_batch_sink(
     post = poster or default_poster
 
     def handle_partition(rows: Iterator[Any]) -> None:
-        batch: list[Any] = []
-        for row in rows:
-            batch.append(row)
-            if len(batch) >= batch_size:
-                post(url, rows_to_feature_collection(batch))
-                batch = []
-        if batch:
-            post(url, rows_to_feature_collection(batch))
+        for fc in feature_collections(rows, batch_size):
+            post(url, fc)
 
     df.foreachPartition(handle_partition)
 
@@ -92,89 +103,54 @@ def submit_single_collection(
 # with commit/abort semantics (executor-side batching like http_batch_sink,
 # plus an all-or-nothing commit protocol the foreachPartition form lacks).
 # ---------------------------------------------------------------------------
-try:  # pragma: no cover - import guard for older Spark
-    from dataclasses import dataclass
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
 
-    @dataclass
-    class _BatchesWritten(WriterCommitMessage):
-        part_paths: list[str]
+@dataclass
+class _BatchesWritten(WriterCommitMessage):
+    part_paths: list[str]
 
-    class SignsSinkWriter(DataSourceWriter):
-        """Per-task writer: rows → bounded FeatureCollection batches →
-        one staged JSON file per batch (the file stands in for the POST —
-        this container has no egress; a real deployment swaps the file
-        write for default_poster). Tasks stage under a task-unique prefix
-        and `commit` publishes a manifest; `abort` leaves only unreferenced
-        staging files — the same two-phase discipline as Spark's file
-        sinks, applied to an HTTP-ish destination."""
 
-        def __init__(self, options: dict[str, str]):
-            self.out_dir = options["path"]
-            self.batch_size = int(options.get("batch_size", "1000"))
+class SignsSinkWriter(DataSourceWriter):
+    """Per-task writer: rows → bounded FeatureCollection batches →
+    one staged JSON file per batch (the file stands in for the POST; a
+    real deployment swaps the file write for default_poster). Tasks
+    stage under a task-unique prefix
+    and `commit` publishes a manifest; `abort` leaves only unreferenced
+    staging files — the same two-phase discipline as Spark's file
+    sinks, applied to an HTTP-ish destination."""
 
-        def write(self, it):
-            import json as _json
-            import os
-            import uuid
+    def __init__(self, options: dict[str, str]):
+        self.out_dir = options["path"]
+        self.batch_size = int(options.get("batch_size", "1000"))
 
-            from ..sinks.http import rows_to_feature_collection
+    def write(self, it):
+        os.makedirs(self.out_dir, exist_ok=True)
+        task_tag = uuid.uuid4().hex[:12]
+        paths: list[str] = []
+        for n, fc in enumerate(feature_collections(it, self.batch_size)):
+            p = os.path.join(self.out_dir, f"staged_{task_tag}_{n}.json")
+            with open(p, "w") as fh:
+                json.dump(fc, fh)
+            paths.append(p)
+        return _BatchesWritten(part_paths=paths)
 
-            os.makedirs(self.out_dir, exist_ok=True)
-            task_tag = uuid.uuid4().hex[:12]
-            paths: list[str] = []
-            batch: list = []
-            n = 0
+    def commit(self, messages):
+        manifest = sorted(
+            p for m in messages if m is not None for p in m.part_paths
+        )
+        with open(os.path.join(self.out_dir, "_MANIFEST.json"), "w") as fh:
+            json.dump({"committed": manifest}, fh)
 
-            def flush():
-                nonlocal batch, n
-                if not batch:
-                    return
-                fc = rows_to_feature_collection(batch)
-                p = os.path.join(
-                    self.out_dir, f"staged_{task_tag}_{n}.json"
-                )
-                with open(p, "w") as fh:
-                    _json.dump(fc, fh)
-                paths.append(p)
-                batch = []
-                n += 1
+    def abort(self, messages):
+        pass  # staged files are unreferenced without a manifest
 
-            for row in it:
-                batch.append(row)
-                if len(batch) >= self.batch_size:
-                    flush()
-            flush()
-            return _BatchesWritten(part_paths=paths)
 
-        def commit(self, messages):
-            import json as _json
-            import os
+class SignsSinkDataSource(DataSource):
+    """`df.write.format("signs_sink").option("path", dir).save()`."""
 
-            manifest = sorted(
-                p for m in messages if m is not None for p in m.part_paths
-            )
-            with open(os.path.join(self.out_dir, "_MANIFEST.json"), "w") as fh:
-                _json.dump({"committed": manifest}, fh)
+    @classmethod
+    def name(cls) -> str:
+        return "signs_sink"
 
-        def abort(self, messages):
-            pass  # staged files are unreferenced without a manifest
-
-    class SignsSinkDataSource(DataSource):
-        """`df.write.format("signs_sink").option("path", dir).save()`."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "signs_sink"
-
-        def writer(self, schema, overwrite: bool):  # type: ignore[override]
-            return SignsSinkWriter(self.options)
-
-    HAS_DATASOURCE_WRITER = True
-except ImportError:  # pragma: no cover
-    HAS_DATASOURCE_WRITER = False
+    def writer(self, schema, overwrite: bool):  # type: ignore[override]
+        return SignsSinkWriter(self.options)

@@ -16,77 +16,65 @@ referenced.
 
 from __future__ import annotations
 
-try:  # pragma: no cover - import guard mirrors sinks/http.py
-    from dataclasses import dataclass
+import glob
+import json
+import os
+import uuid
+from dataclasses import dataclass
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamWriter,
-        WriterCommitMessage,
-    )
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceStreamWriter,
+    WriterCommitMessage,
+)
 
-    @dataclass
-    class _StagedFile(WriterCommitMessage):
-        path: str
-        n_rows: int
 
-    class JsonlStreamWriter(DataSourceStreamWriter):
-        def __init__(self, options: dict[str, str]):
-            self.out_dir = options["path"]
+@dataclass
+class _StagedFile(WriterCommitMessage):
+    path: str
+    n_rows: int
 
-        def write(self, it):
-            import json as _json
-            import os
-            import uuid
 
-            os.makedirs(self.out_dir, exist_ok=True)
-            p = os.path.join(
-                self.out_dir, f"staged_{uuid.uuid4().hex[:12]}.jsonl"
-            )
-            n = 0
-            with open(p, "w") as fh:
-                for row in it:
-                    fh.write(_json.dumps(row.asDict()) + "\n")
-                    n += 1
-            return _StagedFile(path=p, n_rows=n)
+class JsonlStreamWriter(DataSourceStreamWriter):
+    def __init__(self, options: dict[str, str]):
+        self.out_dir = options["path"]
 
-        def commit(self, messages, batchId: int):
-            import json as _json
-            import os
+    def write(self, it):
+        os.makedirs(self.out_dir, exist_ok=True)
+        p = os.path.join(self.out_dir, f"staged_{uuid.uuid4().hex[:12]}.jsonl")
+        n = 0
+        with open(p, "w") as fh:
+            for row in it:
+                fh.write(json.dumps(row.asDict()) + "\n")
+                n += 1
+        return _StagedFile(path=p, n_rows=n)
 
-            files = sorted(m.path for m in messages if m is not None)
-            manifest = os.path.join(
-                self.out_dir, f"_manifest_{batchId}.json"
-            )
-            with open(manifest, "w") as fh:
-                _json.dump({"batch": batchId, "committed": files}, fh)
+    def commit(self, messages, batchId: int):
+        files = sorted(m.path for m in messages if m is not None)
+        manifest = os.path.join(self.out_dir, f"_manifest_{batchId}.json")
+        with open(manifest, "w") as fh:
+            json.dump({"batch": batchId, "committed": files}, fh)
 
-        def abort(self, messages, batchId: int):
-            pass  # staged files are unreferenced without a manifest
+    def abort(self, messages, batchId: int):
+        pass  # staged files are unreferenced without a manifest
 
-    class JsonlStreamSinkDataSource(DataSource):
-        """`df.writeStream.format("jsonl_stream_sink").option("path", d)`."""
 
-        @classmethod
-        def name(cls) -> str:
-            return "jsonl_stream_sink"
+class JsonlStreamSinkDataSource(DataSource):
+    """`df.writeStream.format("jsonl_stream_sink").option("path", d)`."""
 
-        def streamWriter(self, schema, overwrite: bool):  # type: ignore[override]
-            return JsonlStreamWriter(self.options)
+    @classmethod
+    def name(cls) -> str:
+        return "jsonl_stream_sink"
 
-    HAS_STREAM_WRITER = True
-except ImportError:  # pragma: no cover
-    HAS_STREAM_WRITER = False
+    def streamWriter(self, schema, overwrite: bool):  # type: ignore[override]
+        return JsonlStreamWriter(self.options)
 
 
 def committed_files(out_dir: str) -> list[str]:
     """Union of all per-batch manifests — the ONLY files a consumer may
     read. Staging files not listed here are uncommitted garbage."""
-    import glob
-    import json as _json
-
     files: list[str] = []
     for m in sorted(glob.glob(f"{out_dir}/_manifest_*.json")):
         with open(m) as fh:
-            files.extend(_json.load(fh)["committed"])
+            files.extend(json.load(fh)["committed"])
     return files

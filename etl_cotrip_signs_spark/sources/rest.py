@@ -2,7 +2,7 @@
 
 The reference fetches pages serially on one event loop, chasing the
 ``next-offset`` response header until it is absent or the literal string
-``'None'`` (``/root/reference/task.ts:57-73``). Two implementations:
+``'None'`` (``task.ts:57-73``). Two implementations:
 
 1. :func:`fetch_all_features` — faithful serial pagination at the driver
    boundary (pages must be discovered by following the header chain), then
@@ -28,6 +28,12 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+)
 
 from .geojson import features_to_df
 
@@ -129,168 +135,138 @@ def read_signs(spark: SparkSession, fetch: FetchFn) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Parallel variant: Spark 4 Python Data Source (one partition per page).
 # ---------------------------------------------------------------------------
-try:  # pragma: no cover - import guard for older Spark
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-    class _PagePartition(InputPartition):
-        def __init__(self, offset: str | None):
-            self.offset = offset
 
-    class RestSignsReader(DataSourceReader):
-        def __init__(self, options: dict[str, str]):
-            self.options = options
+def feature_row(feat: dict[str, Any]) -> tuple:
+    """One GeoJSON feature dict → ``(id, geom_type, coordinates, properties)``.
 
-        def _fetch(self) -> FetchFn:
-            transport = self.options.get("transport", "http")
-            if transport == "file":
-                return file_fetcher(self.options["path"])
-            return http_fetcher(
-                self.options.get("base_url", "https://data.cotrip.org/api/v1/signs"),
-                self.options.get("token", ""),
-            )
+    Reference precedence (task.ts:79): properties.id first, unconditionally;
+    the top-level GeoJSON id is only a documented-extension fallback (same
+    rule as operators/signs.py project_features). Explicit None checks: a
+    falsy-but-present id ('' / 0) is still an id, and every id is
+    stringified into the string-typed column."""
+    geom = feat.get("geometry") or {}
+    props = feat.get("properties") or {}
+    feat_id = props.get("id")
+    if feat_id is None:
+        feat_id = feat.get("id")
+    return (
+        None if feat_id is None else str(feat_id),
+        geom.get("type"),
+        json.dumps(geom.get("coordinates"), separators=(",", ":")),
+        {str(k): (None if v is None else str(v)) for k, v in props.items()},
+    )
 
-        def partitions(self) -> list[InputPartition]:
-            offsets = self.options.get("offsets")
-            if offsets:
-                return [
-                    _PagePartition(o if o != "" else None)
-                    for o in offsets.split(",")
-                ]
-            return [_PagePartition(None)]
 
-        def read(self, partition: _PagePartition):  # type: ignore[override]
-            payload, _ = self._fetch()(partition.offset)
-            for feat in payload.get("features", []):
-                geom = feat.get("geometry") or {}
-                props = feat.get("properties") or {}
-                # Reference precedence (task.ts:79): properties.id first,
-                # unconditionally; the top-level GeoJSON id is only a
-                # documented-extension fallback (same rule as
-                # operators/signs.py project_features). Explicit None
-                # checks: a falsy-but-present id ('' / 0) is still an id,
-                # and every id is stringified into the string-typed column.
-                feat_id = props.get("id")
-                if feat_id is None:
-                    feat_id = feat.get("id")
-                yield (
-                    None if feat_id is None else str(feat_id),
-                    geom.get("type"),
-                    json.dumps(geom.get("coordinates"), separators=(",", ":")),
-                    {str(k): (None if v is None else str(v)) for k, v in props.items()},
-                )
+def options_fetcher(options: dict[str, str]) -> FetchFn:
+    """The transport a data source's options name: ``file`` or ``http``."""
+    if options.get("transport", "http") == "file":
+        return file_fetcher(options["path"])
+    return http_fetcher(
+        options.get("base_url", "https://data.cotrip.org/api/v1/signs"),
+        options.get("token", ""),
+    )
 
-    from pyspark.sql.datasource import SimpleDataSourceStreamReader
 
-    _STREAM_DONE = "__done__"
+class _PagePartition(InputPartition):
+    def __init__(self, offset: str | None):
+        self.offset = offset
 
-    class RestSignsStreamReader(SimpleDataSourceStreamReader):
-        """Streaming pagination: the reference's serial next-offset loop
-        (task.ts:64-72) re-expressed as stream PROGRESS — each micro-batch
-        ingests exactly one page, and the page offset IS the stream offset,
-        checkpointed by Spark. A restart resumes from the last committed
-        page instead of re-fetching the whole chain; `availableNow` drains
-        the chain then stops (the scheduled-Lambda shape, A1+E2, as a
-        streaming query)."""
 
-        def __init__(self, options: dict[str, str]):
-            self.options = options
+class RestSignsReader(DataSourceReader):
+    def __init__(self, options: dict[str, str]):
+        self.options = options
 
-        def _fetch(self) -> FetchFn:
-            transport = self.options.get("transport", "http")
-            if transport == "file":
-                return file_fetcher(self.options["path"])
-            return http_fetcher(
-                self.options.get("base_url", "https://data.cotrip.org/api/v1/signs"),
-                self.options.get("token", ""),
-            )
+    def partitions(self) -> list[InputPartition]:
+        offsets = self.options.get("offsets")
+        if offsets:
+            return [
+                _PagePartition(o if o != "" else None)
+                for o in offsets.split(",")
+            ]
+        return [_PagePartition(None)]
 
-        def initialOffset(self) -> dict:
-            return {"page": ""}  # '' = first page (fetched with offset=None)
+    def read(self, partition: _PagePartition):  # type: ignore[override]
+        payload, _ = options_fetcher(self.options)(partition.offset)
+        for feat in payload.get("features", []):
+            yield feature_row(feat)
 
-        def _page_rows(self, page_offset: str):
-            payload, next_off = self._fetch()(page_offset or None)
-            rows = []
-            for feat in payload.get("features", []):
-                geom = feat.get("geometry") or {}
-                props = feat.get("properties") or {}
-                # properties-first id precedence; see RestSignsReader.read
-                feat_id = props.get("id")
-                if feat_id is None:
-                    feat_id = feat.get("id")
-                rows.append(
-                    (
-                        None if feat_id is None else str(feat_id),
-                        geom.get("type"),
-                        json.dumps(geom.get("coordinates"), separators=(",", ":")),
-                        {str(k): (None if v is None else str(v)) for k, v in props.items()},
-                    )
-                )
-            done = next_off is None or next_off == "None"
-            return rows, (_STREAM_DONE if done else next_off)
 
-        def read(self, start: dict):
-            page = start["page"]
-            if page == _STREAM_DONE:
-                return iter([]), start  # chain drained; offset stops advancing
-            rows, nxt = self._page_rows(page)
-            return iter(rows), {"page": nxt}
+_STREAM_DONE = "__done__"
 
-        def readBetweenOffsets(self, start: dict, end: dict):
-            # Recovery replay: re-fetch the page the start offset names.
-            if start["page"] == _STREAM_DONE:
-                return iter([])
-            rows, _ = self._page_rows(start["page"])
-            return iter(rows)
 
-        def commit(self, end: dict) -> None:
-            pass  # offsets are checkpointed by the engine; nothing to ack
+class RestSignsStreamReader(SimpleDataSourceStreamReader):
+    """Streaming pagination: the reference's serial next-offset loop
+    (task.ts:64-72) re-expressed as stream PROGRESS — each micro-batch
+    ingests exactly one page, and the page offset IS the stream offset,
+    checkpointed by Spark. A restart resumes from the last committed
+    page instead of re-fetching the whole chain; `availableNow` drains
+    the chain then stops (the scheduled-Lambda shape, A1+E2, as a
+    streaming query)."""
 
-    class RestSignsDataSource(DataSource):
-        """`spark.read.format("rest_signs")` — parallel paginated REST scan;
-        `spark.readStream.format("rest_signs")` — one page per micro-batch."""
+    def __init__(self, options: dict[str, str]):
+        self.options = options
 
-        @classmethod
-        def name(cls) -> str:
-            return "rest_signs"
+    def initialOffset(self) -> dict:
+        return {"page": ""}  # '' = first page (fetched with offset=None)
 
-        def schema(self) -> str:
-            return (
-                "id string, geom_type string, coordinates string, "
-                "properties map<string,string>"
-            )
+    def _page_rows(self, page_offset: str):
+        payload, next_off = options_fetcher(self.options)(page_offset or None)
+        rows = [feature_row(feat) for feat in payload.get("features", [])]
+        done = next_off is None or next_off == "None"
+        return rows, (_STREAM_DONE if done else next_off)
 
-        def reader(self, schema) -> DataSourceReader:  # type: ignore[override]
-            return RestSignsReader(self.options)
+    def read(self, start: dict):
+        page = start["page"]
+        if page == _STREAM_DONE:
+            return iter([]), start  # chain drained; offset stops advancing
+        rows, nxt = self._page_rows(page)
+        return iter(rows), {"page": nxt}
 
-        def simpleStreamReader(self, schema):  # type: ignore[override]
-            return RestSignsStreamReader(self.options)
+    def readBetweenOffsets(self, start: dict, end: dict):
+        # Recovery replay: re-fetch the page the start offset names.
+        if start["page"] == _STREAM_DONE:
+            return iter([])
+        rows, _ = self._page_rows(start["page"])
+        return iter(rows)
 
-    HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAS_DATASOURCE_API = False
+    def commit(self, end: dict) -> None:
+        pass  # offsets are checkpointed by the engine; nothing to ack
+
+
+class RestSignsDataSource(DataSource):
+    """`spark.read.format("rest_signs")` — parallel paginated REST scan;
+    `spark.readStream.format("rest_signs")` — one page per micro-batch."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "rest_signs"
+
+    def schema(self) -> str:
+        return (
+            "id string, geom_type string, coordinates string, "
+            "properties map<string,string>"
+        )
+
+    def reader(self, schema) -> DataSourceReader:  # type: ignore[override]
+        return RestSignsReader(self.options)
+
+    def simpleStreamReader(self, schema):  # type: ignore[override]
+        return RestSignsStreamReader(self.options)
 
 
 def read_signs_udtf(spark: SparkSession, pages_dir: str, offsets: list[str | None]) -> DataFrame:
     """UDTF variant of the paginated scan: one table-function call per page
     offset via a lateral join — executors fetch pages in parallel, like the
     DataSource variant, but composable inside any SQL query."""
-    from pyspark.sql.functions import lit, udtf
+    from pyspark.sql.functions import udtf
 
     @udtf(returnType="id string, geom_type string, coordinates string")
     class FetchPage:
         def eval(self, pages_dir: str, offset: str):
             payload, _ = file_fetcher(pages_dir)(offset or None)
             for feat in payload.get("features", []):
-                geom = feat.get("geometry") or {}
-                props = feat.get("properties") or {}
-                feat_id = props.get("id")  # properties-first (task.ts:79)
-                if feat_id is None:
-                    feat_id = feat.get("id")
-                yield (
-                    None if feat_id is None else str(feat_id),
-                    geom.get("type"),
-                    json.dumps(geom.get("coordinates"), separators=(",", ":")),
-                )
+                yield feature_row(feat)[:3]
 
     spark.udtf.register("fetch_signs_page", FetchPage)
     offsets_df = spark.createDataFrame(
@@ -305,9 +281,6 @@ def read_signs_udtf(spark: SparkSession, pages_dir: str, offsets: list[str | Non
     )
 
 
-def register_rest_source(spark: SparkSession) -> bool:
-    """Register the parallel REST data source with a session (if supported)."""
-    if not HAS_DATASOURCE_API:
-        return False
+def register_rest_source(spark: SparkSession) -> None:
+    """Register the parallel REST data source with a session."""
     spark.dataSource.register(RestSignsDataSource)
-    return True

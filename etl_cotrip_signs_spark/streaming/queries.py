@@ -1271,18 +1271,9 @@ def stream_datasource_writer_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil
 
     from ..session import scratch_dir
-    from ..sinks.stream_jsonl import (
-        HAS_STREAM_WRITER,
-        JsonlStreamSinkDataSource,
-        committed_files,
-    )
+    from ..sinks.stream_jsonl import JsonlStreamSinkDataSource, committed_files
 
     ensure_confs(spark)
-    if not HAS_STREAM_WRITER:  # pragma: no cover - runtime capability gate
-        return spark.createDataFrame(
-            [("WAIVER: pyspark lacks DataSourceStreamWriter", 0, 0)],
-            "event_type string, n_events long, sum_cents long",
-        )
     spark.dataSource.register(JsonlStreamSinkDataSource)
     base = scratch_dir("stream_ds_sink", sf_dir)
     out_dir = f"{base}/data"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from etl_cotrip_signs_spark.config import ConfigError, SignsConfig
@@ -11,6 +13,7 @@ from etl_cotrip_signs_spark.operators.signs import (
     project_features,
     signs_pipeline,
 )
+from etl_cotrip_signs_spark.sources.geojson import features_to_df
 
 
 def features_df(spark, rows):
@@ -29,6 +32,44 @@ def test_explode_multipolygon_positional_suffix(spark):
     assert out["m1-0"]["coordinates"] == "[1.5,2.5]"
     assert out["m1-2"]["coordinates"] == "[5.5,6.5]"
     assert all(r["geom_type"] == "Point" for r in out.values())
+
+
+def test_multi_member_text_matches_single_geometry(spark):
+    # One JSON writer for all geometry text: a Multi member is printed by the
+    # same serializer as a single geometry read through features_to_df.
+    df = features_to_df(
+        spark,
+        [
+            {"properties": {"id": "p"}, "geometry": {"type": "Point", "coordinates": [1e-05, 39.7]}},
+            {"properties": {"id": "m"}, "geometry": {"type": "MultiPoint", "coordinates": [[1e-05, 39.7]]}},
+        ],
+    )
+    out = {r["id"]: r["coordinates"] for r in signs_pipeline(df, ["Point"]).collect()}
+    assert set(out) == {"p", "m-0"}
+    assert out["m-0"] == out["p"]
+    assert json.loads(out["p"]) == [1e-05, 39.7]
+
+
+@pytest.mark.parametrize("coords", ['{"a":1}', "[[1.0,2.0],", "not json", "null"])
+def test_explode_multi_rejects_non_array_coordinates(spark, coords):
+    # A Multi whose coordinates are not a JSON array fails the job instead of
+    # emitting bogus members or silently dropping the row.
+    df = features_df(spark, [("bad", "MultiPoint", coords, None)])
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        explode_multi(df).collect()
+
+
+def test_signs_pipeline_runs_without_python_workers(spark):
+    df = features_df(
+        spark,
+        [
+            ("p1", "Point", "[1.0,2.0]", None),
+            ("m1", "MultiPoint", "[[1.0,2.0],[3.0,4.0]]", None),
+        ],
+    )
+    plan = signs_pipeline(df, ["Point"])._jdf.queryExecution().executedPlan().toString()
+    assert "Generate posexplode" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_explode_empty_multi_drops_row(spark):

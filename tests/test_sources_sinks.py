@@ -13,11 +13,11 @@ from etl_cotrip_signs_spark.sinks.http import (
     submit_single_collection,
 )
 from etl_cotrip_signs_spark.sources.rest import (
-    HAS_DATASOURCE_API,
     fetch_all_features,
     file_fetcher,
     iter_pages,
     read_signs,
+    read_signs_udtf,
     register_rest_source,
 )
 
@@ -60,9 +60,7 @@ def test_rest_pipeline_end_to_end(spark):
 
 
 def test_parallel_datasource_matches_serial(spark):
-    if not HAS_DATASOURCE_API:
-        return
-    assert register_rest_source(spark)
+    register_rest_source(spark)
     df = (
         spark.read.format("rest_signs")
         .option("transport", "file")
@@ -195,10 +193,6 @@ def test_http_transport_stops_on_missing_header(monkeypatch):
 def test_streaming_source_pages_per_microbatch(spark, tmp_path):
     """The stream reader maps one page per micro-batch (offset = page
     chain) and its union equals the serial batch scan."""
-    import pytest
-
-    if not HAS_DATASOURCE_API:
-        pytest.skip("Python DataSource API unavailable")
     register_rest_source(spark)
     stream = (
         spark.readStream.format("rest_signs")
@@ -229,11 +223,9 @@ def test_datasource_reader_prefers_properties_id(spark, tmp_path):
     """End-to-end id precedence at the source (VERDICT r2 task 7): a feature
     carrying BOTH a top-level GeoJSON id and a differing properties.id must
     surface properties.id (task.ts:79 uses sign.properties.id
-    unconditionally); top-level id remains the documented fallback."""
-    import pytest
-
-    if not HAS_DATASOURCE_API:
-        pytest.skip("Python DataSource API unavailable")
+    unconditionally); top-level id remains the documented fallback. Every
+    reader of the page agrees: batch DataSource, streaming DataSource, UDTF
+    and the serial driver path."""
     pages = tmp_path / "pages"
     pages.mkdir()
     (pages / "page_0.json").write_text(json.dumps({
@@ -254,8 +246,9 @@ def test_datasource_reader_prefers_properties_id(spark, tmp_path):
             },
         ],
     }))
+    want = ["42", "only-top", "props-id"]
     register_rest_source(spark)
-    for opts in ({"offsets": ""}, {}):  # batch DataSource + streaming default
+    for opts in ({"offsets": ""}, {}):  # explicit first-page offset + default
         df = (
             spark.read.format("rest_signs")
             .option("transport", "file")
@@ -263,11 +256,30 @@ def test_datasource_reader_prefers_properties_id(spark, tmp_path):
             .options(**opts)
             .load()
         )
-        assert sorted(r["id"] for r in df.collect()) == ["42", "only-top", "props-id"]
+        assert sorted(r["id"] for r in df.collect()) == want
+    stream = (
+        spark.readStream.format("rest_signs")
+        .option("transport", "file")
+        .option("path", str(pages))
+        .load()
+    )
+    q = (
+        stream.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("mem_rest_stream_ids")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination()
+    assert sorted(r["id"] for r in spark.table("mem_rest_stream_ids").collect()) == want
+    udtf_df = read_signs_udtf(spark, str(pages), [None])
+    assert sorted(r["id"] for r in udtf_df.collect()) == want
     # serial driver path goes through project_features, same precedence
     out = signs_pipeline(read_signs(spark, file_fetcher(str(pages))),
                          ["Point", "LineString", "Polygon"])
-    assert sorted(r["id"] for r in out.collect()) == ["42", "only-top", "props-id"]
+    assert sorted(r["id"] for r in out.collect()) == want
 
 
 def test_http_fetcher_retries_with_backoff(monkeypatch):
