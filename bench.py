@@ -123,7 +123,7 @@ HEADLINE = [
 
 def main() -> None:
     from etl_cotrip_signs_spark import registry
-    from etl_cotrip_signs_spark.session import get_spark
+    from etl_cotrip_signs_spark.session import codegen_compile_count, get_spark
 
     registry.load_all()
     spark = get_spark("etl-cotrip-signs-bench")
@@ -166,6 +166,9 @@ def main() -> None:
     # before, at each third, and after the headline loop; normalize every
     # query by the NEAREST sample in time and report the median + spread.
     timings: dict[str, float] = {}
+    # classes compiled by each query's second run: a warm run that still
+    # compiles has outgrown the generated-code cache
+    codegen_compiles: dict[str, int] = {}
     calibration_samples: list[dict] = []
 
     def sample_calibration(at: int) -> None:
@@ -178,7 +181,11 @@ def main() -> None:
         if i in thirds:
             sample_calibration(i)
         _release_session_state(spark)
-        timings[name] = round(min(run_once(name), run_once(name)), 3)
+        first = run_once(name)
+        compiled_before = codegen_compile_count(spark)
+        second = run_once(name)
+        codegen_compiles[name] = codegen_compile_count(spark) - compiled_before
+        timings[name] = round(min(first, second), 3)
     sample_calibration(len(HEADLINE))
     queries_normalized = {
         name: round(
@@ -217,6 +224,7 @@ def main() -> None:
         calibration,
         calibration_samples=calibration_samples,
         queries_normalized=queries_normalized,
+        codegen_compiles=codegen_compiles,
     )
     # Detail (per-query / per-probe maps) goes to a repo file AND an
     # earlier stdout line; the compact headline prints LAST. The driver
@@ -248,6 +256,7 @@ def emit_lines(
     calibration: float,
     calibration_samples: list[dict] | None = None,
     queries_normalized: dict[str, float] | None = None,
+    codegen_compiles: dict[str, int] | None = None,
 ) -> tuple[str, str]:
     """Build the (detail, headline) JSON lines. Headline stays compact —
     scalar fields only, no unbounded per-query maps — so it parses intact
@@ -284,6 +293,7 @@ def emit_lines(
         "calibration_samples": calibration_samples or [],
         "calibration_median": cal_median,
         "queries_normalized": queries_normalized or {},
+        "codegen_compiles": codegen_compiles or {},
         "sf": float(sf) if sf else None,
     }
     slowest = max(timings, key=timings.get) if timings else None

@@ -2,9 +2,11 @@
 
 The engine is designed for a multi-executor cluster (partition-count and
 broadcast decisions assume distributed execution) but is exercised locally
-on ``local[N]``. All confs here are runtime-settable so the same tuning can
-be applied to an externally-provided session (the verify driver builds its
-own) via :func:`ensure_confs`.
+on ``local[N]``. The confs in ``_RUNTIME_CONFS`` are runtime-settable, so
+the same tuning can be applied to an externally-provided session (the verify
+driver builds its own) via :func:`ensure_confs`. The generated-code cache
+size is static: only :func:`get_spark` applies it, on the builder, so a
+session built elsewhere keeps Spark's default of 100 entries.
 """
 
 from __future__ import annotations
@@ -34,6 +36,25 @@ _RUNTIME_CONFS = {
     # a selective fact-fact join (fixture thresholds lowered there).
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
 }
+
+
+# Entries in Spark's generated-code cache (`spark.sql.codegen.cache.maxEntries`,
+# default 100; static, so it only takes effect on a new session). One
+# dedup_chains pass generates ~100 distinct classes (97-99 measured), and the
+# default cache already evicts at that size, because Guava enforces the cap
+# per segment (4 segments of 25), not in total: each warm pass recompiled
+# 35-41 classes with Janino, and the JIT compiled the fresh classes again.
+# 1000 is 10x that largest per-query working set.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far, i.e. misses of the
+    generated-code cache; the difference of two readings counts what the
+    work between them compiled. On ``local[N]`` the executors share the
+    driver's JVM, so their compiles count too."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def ensure_confs(spark: SparkSession) -> SparkSession:
@@ -69,6 +90,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

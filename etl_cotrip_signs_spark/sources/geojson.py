@@ -80,8 +80,10 @@ def features_to_df(spark: SparkSession, features: list[dict[str, Any]]) -> DataF
 
     Used at the REST-source boundary (the one place data legitimately exists
     on the driver, exactly like the reference's in-memory page list,
-    task.ts:57-73). Features are shipped as JSON lines and parsed by
-    executors — the driver never deserializes geometry.
+    task.ts:57-73). The driver holds every feature as a parsed dict (the
+    fetchers ``json.load`` each page) and serializes each one back to a
+    JSON line here; executors parse the lines with ``from_json``, which
+    also writes the compact coordinates text.
     """
     lines = [json.dumps(f, separators=(",", ":")) for f in features]
     raw = spark.createDataFrame([(line,) for line in lines], "value string")

@@ -58,14 +58,20 @@ def test_headline_length_independent_of_query_count():
 
 def test_detail_line_carries_full_maps():
     timings, probes, normalized, rows = _fake_inputs(50)
-    detail, _ = bench.emit_lines(
-        timings, probes, normalized, rows, calibration=0.092
+    compiles = {k: i % 3 for i, k in enumerate(timings)}
+    detail, headline = bench.emit_lines(
+        timings, probes, normalized, rows, calibration=0.092,
+        codegen_compiles=compiles,
     )
     parsed = json.loads(detail)
     assert parsed["queries"] == timings
     assert parsed["probes"] == probes
     assert parsed["probes_normalized"] == normalized
     assert parsed["probe_rows"] == rows
+    assert parsed["codegen_compiles"] == compiles
+    # the per-query compile counts ride on the detail line only
+    assert "codegen_compiles" not in json.loads(headline)
+    assert len(headline) < 1500
 
 
 def test_interleaved_calibration_samples_on_headline_line():

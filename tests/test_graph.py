@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from etl_cotrip_signs_spark.operators import graph
 from etl_cotrip_signs_spark.operators.graph import connected_components
+from etl_cotrip_signs_spark.session import codegen_compile_count
 
 
 def _cc(spark, nodes, edges):
@@ -112,7 +113,7 @@ def test_random_graphs_match_union_find(spark):
 def test_dedup_components_match_union_find(spark):
     """Default-lane CC parity for dedup_components_ngram: its components
     equal a union-find over dedup_ngram_jaccard's pairs (whose own oracle
-    parity runs in this lane too)."""
+    parity runs in this lane too), and a second call compiles no class."""
     import duckdb
 
     from etl_cotrip_signs_spark.operators.dedup import dedup_ngram_jaccard
@@ -130,11 +131,20 @@ def test_dedup_components_match_union_find(spark):
         for r in dedup_ngram_jaccard(spark, SF_SMALL).collect()
     ]
     assert pairs, "fixture should hold near-duplicate pairs"
-    got = {
-        r["doc_id"]: r["component"]
-        for r in graph.dedup_components_ngram(spark, SF_SMALL).collect()
-    }
+
+    def components():
+        return {
+            r["doc_id"]: r["component"]
+            for r in graph.dedup_components_ngram(spark, SF_SMALL).collect()
+        }
+
+    got = components()
     assert got == _union_find_reference(docs, pairs)
+    # A repeated query reuses its generated classes: the generated-code
+    # cache (session.CODEGEN_CACHE_ENTRIES) holds the ~100 one call makes.
+    compiled = codegen_compile_count(spark)
+    assert components() == got
+    assert codegen_compile_count(spark) - compiled == 0
 
 
 def test_pagerank_mass_conservation_and_hub(spark):
