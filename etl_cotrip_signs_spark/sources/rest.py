@@ -6,8 +6,9 @@ The reference fetches pages serially on one event loop, chasing the
 
 1. :func:`fetch_all_features` — faithful serial pagination at the driver
    boundary (pages must be discovered by following the header chain), then
-   hand off to Spark via ``features_to_df``. This is the semantics-exact
-   path.
+   hand off to Spark via ``features_to_df``: the feature list goes to the
+   JVM as an Arrow table of JSON-array chunks, with no Python worker in
+   between, and executors parse it. This is the semantics-exact path.
 2. :class:`RestSignsDataSource` — a Spark 4 Python Data Source that maps
    one *partition per page* so executors fetch pages in parallel. Because
    the header chain is inherently serial, the parallel reader takes the

@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 from etl_cotrip_signs_spark.operators.signs import signs_pipeline
 from etl_cotrip_signs_spark.sinks.http import (
@@ -12,6 +13,7 @@ from etl_cotrip_signs_spark.sinks.http import (
     rows_to_feature_collection,
     submit_single_collection,
 )
+from etl_cotrip_signs_spark.sources import geojson
 from etl_cotrip_signs_spark.sources.rest import (
     fetch_all_features,
     file_fetcher,
@@ -42,6 +44,75 @@ def test_read_signs_schema_and_geometry_encoding(spark):
     assert rows["s1"]["geom_type"] == "Point"
     assert json.loads(rows["s1"]["coordinates"]) == [-105.1, 39.7]
     assert rows["s1"]["properties"]["routeName"] == "I-70"
+
+
+def test_read_signs_parses_in_a_generate_over_the_local_table(spark):
+    # The feature list reaches the JVM as Arrow data: the leaf is the local
+    # table, not the RDD of pickled lines that Python workers relay, and the
+    # JSON parse runs on executors inside the Generate (a Project would be
+    # folded into driver-side evaluation by ConvertToLocalRelation).
+    df = read_signs(spark, file_fetcher(PAGES_DIR))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"Generate explode\(from_json.*\n\s*\+- LocalTableScan", plan), plan
+    assert "Scan ExistingRDD" not in plan
+
+
+def _sign(sid, geom_type, coordinates):
+    props = {
+        "communicationStatus": "OK", "direction": "N", "id": sid,
+        "lastUpdated": "2026-01-01T00:00:00Z", "marker": "123.5",
+        "messageText": f"msg {sid}", "name": f"sign {sid}",
+        "nativeId": f"n{sid}", "routeName": "I-70", "speed": "55",
+    }
+    return (sid, geom_type, coordinates, props)
+
+
+# What one per-feature from_json parse gives for each input, in input order.
+_PACKAGED_ROWS = [
+    _sign("s1", "Point", "[-105.1,39.7]"),
+    _sign("s2", "LineString", "[[-105.1,39.7],[-105.2,39.8]]"),
+    _sign("s3", "Polygon", "[[[-105.0,39.0],[-105.5,39.0],[-105.5,39.5],[-105.0,39.0]]]"),
+    _sign("s4", "MultiPoint", "[[-104.9,38.8],[-104.8,38.9],[-104.7,39.1]]"),
+    _sign("s5", "MultiLineString", "[[[-105.1,39.7],[-105.2,39.8]],[[-106.0,40.0],[-106.1,40.1]]]"),
+    _sign(
+        "s6", "MultiPolygon",
+        "[[[[-105.0,39.0],[-105.5,39.0],[-105.0,39.5],[-105.0,39.0]]],"
+        "[[[-104.0,38.0],[-104.5,38.0],[-104.0,38.5],[-104.0,38.0]]]]",
+    ),
+    _sign("s7", "MultiPoint", "[]"),
+    _sign("s8", "Point", "[-107.25,37.5]"),
+    _sign("s9", "LineString", "[[-107.0,37.0],[-107.5,37.25],[-108.0,37.5]]"),
+]
+_HOSTILE_FEATURES = [
+    {"id": "g", "geometry": "x", "properties": {"k": "v"}},
+    {"id": "l", "geometry": {"type": "Point", "coordinates": [1, 2]}, "properties": [1, 2]},
+    None,
+    {"id": 7, "geometry": {"type": "Point", "coordinates": [1.5, 2]}, "properties": {}},
+    {"id": "n", "geometry": {"type": "Point", "coordinates": [1, 2]}, "properties": {"o": {"n": 1}}},
+    "not a feature",  # shares a chunk with "n", which must survive it
+    [1, 2],
+]
+_HOSTILE_ROWS = [
+    ("g", None, None, {"k": "v"}),
+    ("l", "Point", "[1,2]", None),
+    (None, None, None, None),
+    ("7", "Point", "[1.5,2]", {}),
+    ("n", "Point", "[1,2]", {"o": '{"n":1}'}),
+    (None, None, None, None),
+    (None, None, None, None),
+]
+
+
+def test_features_to_df_matches_per_feature_parse_across_chunks(spark, monkeypatch):
+    monkeypatch.setattr(geojson, "FEATURES_PER_CHUNK", 2)
+    packaged = fetch_all_features(file_fetcher(PAGES_DIR))
+    for features, want in ((packaged, _PACKAGED_ROWS), (_HOSTILE_FEATURES, _HOSTILE_ROWS)):
+        df = geojson.features_to_df(spark, features)
+        assert df.schema == geojson.FEATURE_SCHEMA
+        assert [tuple(r) for r in df.collect()] == want
+    empty = geojson.features_to_df(spark, [])
+    assert empty.schema == geojson.FEATURE_SCHEMA
+    assert empty.collect() == []
 
 
 def test_rest_pipeline_end_to_end(spark):
