@@ -48,14 +48,6 @@ _RUNTIME_CONFS = {
 CODEGEN_CACHE_ENTRIES = 1000
 
 
-def _default_driver_memory() -> str:
-    """Half of the host's physical memory, capped at 16g: a local driver's
-    heap holds the executors' work too, and a heap as large as the host is
-    never pressed to shrink. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
-    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{min(physical // 2, 16 << 30) >> 20}m"
-
-
 def codegen_compile_count(spark: SparkSession) -> int:
     """Classes Janino has compiled in this JVM so far, i.e. misses of the
     generated-code cache; the difference of two readings counts what the
@@ -95,7 +87,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))

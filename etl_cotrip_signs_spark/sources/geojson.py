@@ -31,8 +31,8 @@ FEATURE_SCHEMA = T.StructType(
     ]
 )
 
-# Features serialized into one JSON-array row by `features_to_df`. Each row is
-# one Arrow array and one unit of executor-side parse work.
+# Most features serialized into one JSON-array row by `features_to_df`. Each
+# row is one Arrow array and one unit of executor-side parse work.
 FEATURES_PER_CHUNK = 1_000
 
 # Raw GeoJSON feature schema as read from the wire. `coordinates` is declared
@@ -101,8 +101,16 @@ def features_to_df(spark: SparkSession, features: list[dict[str, Any]]) -> DataF
     ``from_json`` also writes the compact coordinates text. Rows keep the
     list's order. A ``None`` feature, or any non-dict, gives an all-NULL row,
     so one bad entry cannot void the rest of its chunk.
+
+    The local table spreads its rows over up to ``defaultParallelism``
+    partitions, which carry through ``signs_pipeline`` to the sink's
+    ``foreachPartition``. A list too short to fill ``defaultParallelism``
+    chunks of ``FEATURES_PER_CHUNK`` is cut into
+    ``ceil(n / defaultParallelism)``-sized chunks instead, so a small feed
+    still spreads its parse and POSTs over the cores.
     """
-    n = FEATURES_PER_CHUNK
+    parallelism = spark.sparkContext.defaultParallelism
+    n = min(FEATURES_PER_CHUNK, max(1, -(-len(features) // parallelism)))
     arrays = []
     for i in range(0, len(features), n):
         chunk = [f if isinstance(f, dict) else None for f in features[i : i + n]]

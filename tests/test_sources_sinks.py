@@ -57,6 +57,19 @@ def test_read_signs_parses_in_a_generate_over_the_local_table(spark):
     assert "Scan ExistingRDD" not in plan
 
 
+def test_features_to_df_spreads_a_small_list_over_the_cores(spark):
+    # A list too short for one full chunk per core is cut into smaller
+    # chunks, so the parse and the sink's per-partition POSTs do not collapse
+    # into a single task: more than half the cores (or features) get a
+    # partition, and no partition is empty.
+    cores = spark.sparkContext.defaultParallelism
+    for n in (1, 9, 2 * cores + 1):
+        features = [{"id": str(i), "geometry": None, "properties": {}} for i in range(n)]
+        sizes = geojson.features_to_df(spark, features).rdd.glom().map(len).collect()
+        assert sum(sizes) == n and min(sizes) > 0, sizes
+        assert min(n, cores) < 2 * len(sizes) <= 2 * min(n, cores), sizes
+
+
 def _sign(sid, geom_type, coordinates):
     props = {
         "communicationStatus": "OK", "direction": "N", "id": sid,
