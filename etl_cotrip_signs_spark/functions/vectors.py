@@ -8,6 +8,8 @@ comparisons are bit-stable after rounding.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, functions as F
 
 
@@ -22,8 +24,10 @@ def lit_long_array(vals) -> Column:
     trips PER ELEMENT on the driver (~1 ms each — a 1024-element bitmap
     measured ~3 s of pure driver time in join_bloom_pruned, r11); parsing
     one array literal string is milliseconds and yields the same
-    expression tree. Guide §5: the driver should do almost no work."""
-    return F.expr("array(" + ",".join(f"{int(v)}L" for v in vals) + ")")
+    expression tree. Guide §5: the driver should do almost no work.
+    Raises ``ValueError`` on an empty input (``array()`` is typed
+    ``array<void>``)."""
+    return _lit_array([f"{int(v)}L" for v in vals])
 
 
 def lit_double_array(vals) -> Column:
@@ -32,8 +36,19 @@ def lit_double_array(vals) -> Column:
     repr(float) is the shortest round-trip decimal form and Java's
     Double.parseDouble is correctly rounded, so the parsed doubles are
     bit-identical to the Python values (verified for exponent and
-    negative-zero forms)."""
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")")
+    negative-zero forms). Raises ``ValueError`` on an empty input or a
+    NaN/±inf element, which has no SQL literal (``nanD`` does not parse)."""
+    vals = [float(v) for v in vals]
+    return _lit_array([f"{v!r}D" for v in vals], all(map(math.isfinite, vals)))
+
+
+def _lit_array(items: list[str], finite: bool = True) -> Column:
+    if not items or not finite:
+        raise ValueError(
+            "a literal array needs non-empty, finite values "
+            f"(got {len(items)} values, finite={finite})"
+        )
+    return F.expr("array(" + ",".join(items) + ")")
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -21,57 +21,19 @@ and cluster sizes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..functions.shingles import shingles_from_tokens, tokens, with_shingles
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import broadcast_if_fits, fits_broadcast
 
 # MinHash parameters: 32 permutations = 8 bands × 4 rows. With Jaccard
 # threshold t, collision prob in ≥1 band is 1-(1-t^4)^8 (s-curve at ~0.5).
 _MINHASH_K = 32
 _BANDS = 8
 _ROWS_PER_BAND = 4
-
-# Verify-join broadcast gate (ADVICE r7 item 1 / VERDICT r7 item 2): the
-# dedup verify stages hang candidate pairs back onto PER-DOC tables
-# (shingle arrays, minhash signatures, size scalars) that are O(corpus)
-# rows. At bench scale broadcasting that side is the right plan — one
-# shuffle-free hash join; at 100 TB a forced hint would collect an
-# unbounded table on the driver and OOM long before the join ran. So the
-# hint is gated on a MEASURED row count: every caller already holds the
-# per-doc side localCheckpointed, making the count() a read of cached
-# partition metadata, not a recompute. Above the cap the join runs
-# hint-free and AQE picks the exchange (sort-merge / shuffle-hash on the
-# doc key); dedup_ppjoin_prefix additionally swaps its whole verify to the
-# posting-join count (the dedup_ngram_jaccard shape), which never
-# materializes a doc's shingle ARRAY on one machine at all. Both paths are
-# pinned identical in tests/test_wave40.py. Two caps because the row
-# widths differ ~8x: fixed-width per-doc tables (16-int signatures, size
-# scalars) are ~128 B/row — 2M rows ≈ 256 MB broadcast; shingle-ARRAY
-# tables carry ~100 hashed longs/doc (~800 B/row) — 500k rows ≈ 400 MB.
-# Both leave headroom under Spark's 8 GB broadcast ceiling while keeping
-# the x100 bench fixtures (500k docs) on the fast path for fixed-width
-# sides.
-_VERIFY_BROADCAST_CAP = int(
-    os.environ.get("SPARK_GRAFT_VERIFY_BCAST_CAP", "2000000")
-)
-_VERIFY_BROADCAST_CAP_ARRAYS = int(
-    os.environ.get("SPARK_GRAFT_VERIFY_BCAST_CAP_ARRAYS", "500000")
-)
-
-
-def _maybe_broadcast(
-    df: DataFrame, n_rows: int, arrays: bool = False
-) -> DataFrame:
-    """Broadcast-hint ``df`` only when its measured size is bounded."""
-    cap = _VERIFY_BROADCAST_CAP_ARRAYS if arrays else _VERIFY_BROADCAST_CAP
-    if n_rows <= cap:
-        return F.broadcast(df)
-    return df
 
 
 @query(
@@ -220,12 +182,10 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
     # self-join degraded broadcast -> shuffle (1.31 -> 2.99 normalized on
     # the 10x density probe). r11 (VERDICT r10 item 7) retries the
     # materialization WITH the stats preserved by an explicit size-gated
-    # broadcast hint (the _maybe_broadcast verify-join gate pattern): the
-    # 32-transform signature projection now computes ONCE (it appeared on
-    # BOTH sides of the self-join — nodes 3+8 of the r10 before-plan) and
-    # the join strategy can no longer silently degrade. Above the measured
-    # cap (the 100 TB regime) the hint is withheld and AQE plans the
-    # exchange, exactly as before.
+    # broadcast hint (session.broadcast_if_fits): the 32-transform
+    # signature projection now computes ONCE (it appeared on BOTH sides of
+    # the self-join — nodes 3+8 of the r10 before-plan) and the join
+    # strategy can no longer silently degrade.
     bands = sig.select(
         "doc_id",
         F.posexplode(
@@ -247,7 +207,8 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
     right = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
     pairs = (
         left.join(
-            _maybe_broadcast(right, n_docs * _BANDS), ["band_id", "band_hash"]
+            broadcast_if_fits(right, n_docs * _BANDS, row_bytes=32),
+            ["band_id", "band_hash"],
         )
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
@@ -1076,16 +1037,18 @@ def dedup_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = sh.count()  # cached-metadata read: sh is localCheckpointed
     with_sizes = (
         inter.join(
-            _maybe_broadcast(
+            broadcast_if_fits(
                 sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza")),
                 n_docs,
+                row_bytes=24,
             ),
             "doc_a",
         )
         .join(
-            _maybe_broadcast(
+            broadcast_if_fits(
                 sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb")),
                 n_docs,
+                row_bytes=24,
             ),
             "doc_b",
         )
@@ -1159,10 +1122,10 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated, with the companion LENGTH filter (J >= 0.8 forces
     5·min(|a|,|b|) >= 4·max(|a|,|b|)) applied inside the join before the
     distinct; verify joins each candidate pair against the per-doc
-    shingle-ARRAY table (broadcast while the measured doc count is under
-    `_VERIFY_BROADCAST_CAP`) and intersects map-side — candidate-bounded
+    shingle-ARRAY table (broadcast while it fits the broadcast budget,
+    `session.fits_broadcast`) and intersects map-side — candidate-bounded
     work with no posting re-shuffle. Nothing is ever all-pairs. Above the
-    cap (the 100 TB regime) the array table exceeds broadcast and the
+    budget (the 100 TB regime) the array table exceeds broadcast and the
     verify switches to the posting-join count (the dedup_ngram_jaccard
     shape) — both paths pinned identical in tests/test_wave40.py; the
     candidate stages are unchanged."""
@@ -1209,7 +1172,7 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     n_docs = d.count()  # cached-metadata read: d is localCheckpointed above
-    if n_docs <= _VERIFY_BROADCAST_CAP_ARRAYS:
+    if fits_broadcast(n_docs, row_bytes=1431):
         arr_a = d.select(
             F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa")
         )
@@ -1427,29 +1390,25 @@ def dedup_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             band_hit = h if band_hit is None else (band_hit | h)
         hits[f"b{b_cnt}r{r}"] = band_hit
-    # Size-gated hints (ADVICE r7 item 1): hs_df (shingle-hash arrays) is
-    # O(corpus); broadcast only while the measured doc count is bounded,
-    # else hint-free (AQE plans the exchange on the doc key). The count is
-    # a cached-metadata read — sig was localCheckpointed above.
-    n_docs = sig.count()
+    n_docs = sig.count()  # cached-metadata read: sig is localCheckpointed
     scored = (
         pair_mask.join(
-            _maybe_broadcast(
+            broadcast_if_fits(
                 hs_df.select(
                     F.col("doc_id").alias("doc_a"), F.col("hs").alias("sh_a")
                 ),
                 n_docs,
-                arrays=True,
+                row_bytes=461,
             ),
             "doc_a",
         )
         .join(
-            _maybe_broadcast(
+            broadcast_if_fits(
                 hs_df.select(
                     F.col("doc_id").alias("doc_b"), F.col("hs").alias("sh_b")
                 ),
                 n_docs,
-                arrays=True,
+                row_bytes=461,
             ),
             "doc_b",
         )

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import broadcast_if_fits
 
 _FH_SEED = chain_seed("fh")
 
@@ -777,13 +778,8 @@ def feature_count_vectorizer_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(W.orderBy(F.col("df").desc(), F.col("t")))
         .cast("long"),
     ).localCheckpoint(eager=True)
-    # Broadcast gate (VERDICT r9 item 4, the text.py/dedup.py discipline):
-    # hint only under a measured vocab row count — a huge-corpus vocabulary
-    # above the cap joins hint-free and AQE picks the exchange.
-    from .text import _maybe_broadcast_vocab
-
     return (
-        occ.join(_maybe_broadcast_vocab(vocab, vocab.count()), "t")
+        occ.join(broadcast_if_fits(vocab, vocab.count(), row_bytes=32), "t")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vocab_terms"),

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.xxh64_sql import XXH64_MACROS, chain_seed
 from ..io import load_table
 from ..registry import query
+from ..session import broadcast_if_fits
 from .dedup import NGRAM_PAIRS_ORACLE, dedup_ngram_jaccard
 
 
@@ -1802,25 +1803,25 @@ def graph_random_walk_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every later cur is an edge endpoint of the symmetric graph, so deg
     # >= 1 and the inner joins after step 1 are row-preserving — the
     # exploded (c1..cT) multiset is exactly the old per-step visit union.
-    # Size-gated broadcast of the indexed adjacency (the dedup
-    # _maybe_broadcast gate pattern): the checkpointed LogicalRDD carries no
+    # Size-gated broadcast of the indexed adjacency
+    # (session.broadcast_if_fits): the checkpointed LogicalRDD carries no
     # statistics, so without a hint all four step joins plan as shuffle
-    # joins of BOTH sides. Under the measured row cap (fixed-width 4-long
-    # rows; 2M rows ≈ 64 MB broadcast) ship the adjacency once per executor
-    # and never shuffle the walker state; above it (the 100 TB regime) the
-    # hint is withheld and AQE plans the exchanges as before. The count is
-    # a cached-metadata read — adj is checkpointed above.
-    adj_bcast = adj.count() <= 2_000_000
+    # joins of BOTH sides. Hinted, Spark builds the adjacency broadcast
+    # once and reuses it in the other three steps (tests/test_graph.py pins
+    # it), and the walker state is never shuffled.
+    n_adj = adj.count()
     state = pts.select(F.col("id").alias("walker"), F.col("id").alias("cur"))
     for t in range(1, _WALK_STEPS + 1):
-        a = adj.select(
-            F.col("u").alias(f"_u{t}"),
-            F.col("v").alias(f"_v{t}"),
-            F.col("idx").alias(f"_idx{t}"),
-            F.col("deg").alias(f"_deg{t}"),
+        a = broadcast_if_fits(
+            adj.select(
+                F.col("u").alias(f"_u{t}"),
+                F.col("v").alias(f"_v{t}"),
+                F.col("idx").alias(f"_idx{t}"),
+                F.col("deg").alias(f"_deg{t}"),
+            ),
+            n_adj,
+            row_bytes=40,
         )
-        if adj_bcast:
-            a = F.broadcast(a)
         h = F.xxhash64(F.lit(f"walk:{t}"), F.col("walker"), F.col("cur"))
         state = (
             state.withColumn("h", h)

@@ -17,6 +17,7 @@ from ..functions.phonetic_sql import SOUNDEX_MACROS
 from ..functions.xxh64_sql import XXH64_MACROS
 from ..io import load_table
 from ..registry import query
+from ..session import broadcast_if_fits
 
 
 def _occurrences(text: Column, needle: str) -> Column:
@@ -1784,31 +1785,6 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- wave 47 (round 9) ---
 
-# Vocab-side broadcast gate (VERDICT r9 item 4, the dedup.py discipline):
-# the frequent-vocabulary tables these queries hang joins on are REDUCTIONS
-# of the corpus (min-df-gated distinct tokens), so at bench scale a
-# broadcast hint is the right plan — but a trillion-token corpus can still
-# carry tens of millions of frequent types, and a FORCED hint there would
-# collect the vocab on the driver and OOM. Gate the hint on a MEASURED row
-# count (the caller holds the vocab localCheckpointed, so the count reads
-# cached partition metadata); above the cap the join runs hint-free and
-# AQE picks the exchange. ~24 B/row (token + count) -> 2M rows ≈ 48 MB,
-# far under Spark's broadcast ceiling.
-import os as _os
-
-_VOCAB_BCAST_CAP = int(
-    _os.environ.get("SPARK_GRAFT_VOCAB_BCAST_CAP", "2000000")
-)
-
-
-def _maybe_broadcast_vocab(df: DataFrame, n_rows: int) -> DataFrame:
-    """Broadcast-hint a vocabulary side only when its measured size is
-    bounded — identical contract to dedup._maybe_broadcast."""
-    if n_rows <= _VOCAB_BCAST_CAP:
-        return F.broadcast(df)
-    return df
-
-
 _PMI_MIN_DF = 25  # frequent-vocab gate BEFORE pairing: bounds pair fan-out
 _PMI_MIN_CO = 10
 _PMI_TOPK = 20
@@ -1889,7 +1865,7 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_vocab = df_t.count()  # cached metadata read post-checkpoint
     keep = (
-        tok.join(_maybe_broadcast_vocab(df_t.select("t"), n_vocab), "t")
+        tok.join(broadcast_if_fits(df_t.select("t"), n_vocab, row_bytes=24), "t")
         .select("doc_id", "t")
         # materialized once (r10): both sides of the per-doc pair self-join
         # consume keep; without the checkpoint each side re-ran the corpus
@@ -1911,16 +1887,18 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         co.join(
-            _maybe_broadcast_vocab(
+            broadcast_if_fits(
                 df_t.select(F.col("t").alias("t1"), F.col("c").alias("c_x")),
                 n_vocab,
+                row_bytes=32,
             ),
             "t1",
         )
         .join(
-            _maybe_broadcast_vocab(
+            broadcast_if_fits(
                 df_t.select(F.col("t").alias("t2"), F.col("c").alias("c_y")),
                 n_vocab,
+                row_bytes=32,
             ),
             "t2",
         )

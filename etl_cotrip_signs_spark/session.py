@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # Runtime confs every query in this engine relies on. Applied defensively to
 # any session we are handed, because each is semantically load-bearing:
@@ -46,6 +46,33 @@ _RUNTIME_CONFS = {
 # 35-41 classes with Janino, and the JIT compiled the fresh classes again.
 # 1000 is 10x that largest per-query working set.
 CODEGEN_CACHE_ENTRIES = 1000
+
+# Byte budget of a size-gated broadcast hint (fits_broadcast). It is the
+# largest side any gate admitted when each site had its own row cap: 500k
+# docs of the ppjoin shingle-array table at 1431 B/row.
+BROADCAST_MAX_BYTES = 500_000 * 1431
+
+
+def fits_broadcast(n_rows: int, row_bytes: int) -> bool:
+    """Whether a join side of ``n_rows`` rows, ``row_bytes`` each, may be
+    broadcast-hinted: ``n_rows * row_bytes <= BROADCAST_MAX_BYTES``.
+
+    A hint on a corpus-sized side is right at bench scale (one shuffle-free
+    hash join) but would collect an unbounded table on the driver at scale,
+    so it is decided on a MEASURED row count. Spark's own size estimate is
+    no guide here: a checkpointed plan can report the size of its input
+    (a ``localCheckpoint`` of a 1,000-row aggregate over 100k rows reports
+    1.2 MB). Callers hold the side ``localCheckpoint``-ed, so their
+    ``count()`` reads cached partition metadata. ``row_bytes`` is the side's
+    UnsafeRow width as broadcast (bytes collected ÷ rows, measured at
+    sf0.01), not the hash relation's allocation, which has a 1 MB or 32 MB
+    floor. Above the budget the join runs hint-free and AQE plans it."""
+    return n_rows * row_bytes <= BROADCAST_MAX_BYTES
+
+
+def broadcast_if_fits(df: DataFrame, n_rows: int, row_bytes: int) -> DataFrame:
+    """``F.broadcast(df)`` when :func:`fits_broadcast`, else ``df``."""
+    return F.broadcast(df) if fits_broadcast(n_rows, row_bytes) else df
 
 
 def codegen_compile_count(spark: SparkSession) -> int:

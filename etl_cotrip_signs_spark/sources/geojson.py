@@ -100,7 +100,9 @@ def features_to_df(spark: SparkSession, features: list[dict[str, Any]]) -> DataF
     worker. Executors parse and explode each chunk in one ``Generate``;
     ``from_json`` also writes the compact coordinates text. Rows keep the
     list's order. A ``None`` feature, or any non-dict, gives an all-NULL row,
-    so one bad entry cannot void the rest of its chunk.
+    so one bad entry cannot void the rest of its chunk. A NaN or ±inf number
+    raises ``ValueError``: GeoJSON numbers are finite, and ``from_json``
+    would turn it into the string ``"NaN"``.
 
     The local table spreads its rows over up to ``defaultParallelism``
     partitions, which carry through ``signs_pipeline`` to the sink's
@@ -115,7 +117,9 @@ def features_to_df(spark: SparkSession, features: list[dict[str, Any]]) -> DataF
     for i in range(0, len(features), n):
         chunk = [f if isinstance(f, dict) else None for f in features[i : i + n]]
         # Only one chunk's text is alive at a time (driver peak memory).
-        arrays.append(pa.array([json.dumps(chunk, separators=(",", ":"))], pa.string()))
+        arrays.append(
+            pa.array([json.dumps(chunk, separators=(",", ":"), allow_nan=False)], pa.string())
+        )
     raw = spark.createDataFrame(pa.table({"value": pa.chunked_array(arrays, pa.string())}))
     return raw.select(
         F.explode(F.from_json("value", T.ArrayType(RAW_FEATURE_SCHEMA))).alias("f")

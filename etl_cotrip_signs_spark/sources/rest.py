@@ -42,13 +42,22 @@ from .geojson import features_to_df
 FetchFn = Callable[[str | None], tuple[dict[str, Any], str | None]]
 
 
+def _finite_numbers(offset: str | None) -> Callable[[str], Any]:
+    """A page's ``parse_constant``: ``json`` accepts NaN/±Infinity, GeoJSON does not."""
+
+    def reject(token: str) -> Any:
+        raise ValueError(f"page at offset {offset!r} holds {token}: GeoJSON numbers must be finite")
+
+    return reject
+
+
 def file_fetcher(pages_dir: str) -> FetchFn:
     """Transport reading pages from disk; mirrors the header chain contract."""
 
     def fetch(offset: str | None) -> tuple[dict[str, Any], str | None]:
         name = f"page_{offset or '0'}.json"
         with open(os.path.join(pages_dir, name)) as fh:
-            payload = json.load(fh)
+            payload = json.load(fh, parse_constant=_finite_numbers(offset))
         return payload, payload.get("next_offset")
 
     return fetch
@@ -89,7 +98,8 @@ def http_fetcher(
                 do_sleep(backoff_base * (2 ** (attempt - 1)))
             try:
                 with urllib.request.urlopen(url, timeout=timeout) as res:
-                    payload = json.loads(res.read().decode("utf-8"))
+                    text = res.read().decode("utf-8")
+                    payload = json.loads(text, parse_constant=_finite_numbers(offset))
                     next_offset = res.headers.get("next-offset")
                 return payload, next_offset
             except urllib.error.HTTPError as e:
@@ -154,7 +164,7 @@ def feature_row(feat: dict[str, Any]) -> tuple:
     return (
         None if feat_id is None else str(feat_id),
         geom.get("type"),
-        json.dumps(geom.get("coordinates"), separators=(",", ":")),
+        json.dumps(geom.get("coordinates"), separators=(",", ":"), allow_nan=False),
         {str(k): (None if v is None else str(v)) for k, v in props.items()},
     )
 

@@ -367,3 +367,37 @@ def test_sssp_matches_dijkstra(spark):
                 dist[y] = nd
                 heapq.heappush(pq, (nd, y))
     assert {int(r.id): int(r.dist_d2) for r in got.itertuples()} == dist
+
+
+def _walk(spark):
+    from .conftest import SF_SMALL
+
+    return graph.graph_random_walk_xxh(spark, SF_SMALL)
+
+
+def test_walk_builds_the_adjacency_broadcast_once(spark):
+    """All four walk steps hint the same adjacency; after execution the
+    final AQE plan builds one BroadcastExchange and reuses it three times."""
+    df = _walk(spark)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    nodes = [line.lstrip(" :+-|") for line in final.splitlines()]
+    assert sum(n.startswith("BroadcastExchange ") for n in nodes) == 1
+    assert sum(n.startswith("ReusedExchange ") for n in nodes) == 3
+
+
+def test_walk_above_broadcast_budget_matches_hinted(spark, monkeypatch):
+    from etl_cotrip_signs_spark import session
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    hinted = _walk(spark)
+    assert "ResolvedHint" in analyzed(hinted)
+    base = sorted(hinted.collect())
+    monkeypatch.setattr(session, "BROADCAST_MAX_BYTES", 0)
+    unhinted = _walk(spark)
+    assert "ResolvedHint" not in analyzed(unhinted)
+    assert sorted(unhinted.collect()) == base

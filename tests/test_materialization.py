@@ -12,6 +12,9 @@ the (expensive) upstream derivation. ``dedup_ngram_jaccard`` went 3.4s →
 2. a source lint forbidding lazy checkpoints anywhere in the engine
    (every call site in this repo fans out or iterates; eager is always
    the correct default here).
+
+A third lint keeps tuning knobs out of the operators: no environment
+reads under ``operators/`` or ``functions/``.
 """
 
 from __future__ import annotations
@@ -35,6 +38,21 @@ def test_no_lazy_local_checkpoints_in_engine():
         if pat.search(p.read_text(encoding="utf-8"))
     ]
     assert offenders == [], f"lazy localCheckpoint at: {offenders}"
+
+
+def test_no_environment_knobs_in_operators_or_functions():
+    """Policy lint: no module under ``operators/`` or ``functions/`` reads
+    ``os.environ`` or ``os.getenv``. Tuning constants live in
+    ``session.py`` (e.g. ``BROADCAST_MAX_BYTES``), not in per-operator
+    environment variables."""
+    pat = re.compile(r"\benviron\b|\bgetenv\b")
+    offenders = [
+        str(p)
+        for sub in ("operators", "functions")
+        for p in (PKG / sub).rglob("*.py")
+        if pat.search(p.read_text(encoding="utf-8"))
+    ]
+    assert offenders == [], f"environment reads at: {offenders}"
 
 
 def test_eager_checkpoint_single_materialization(spark):

@@ -53,6 +53,12 @@ def test_literal_array_helpers_round_trip_exactly(spark):
     for got, want in zip(row["d"], doubles):
         # bit-exact, including -0.0 (== compares equal to 0.0)
         assert struct.pack("<d", got) == struct.pack("<d", want)
+    # No literal for these: `array()` is array<void>, `nanD` does not parse.
+    for bad in ([], [1.0, float("nan")], [float("inf")], [-float("inf"), 2.0]):
+        with pytest.raises(ValueError, match="non-empty, finite"):
+            lit_double_array(bad)
+    with pytest.raises(ValueError, match="non-empty, finite"):
+        lit_long_array([])
 
 
 def _join_blocks(plan: str, key_marker: str) -> list[str]:

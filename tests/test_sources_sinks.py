@@ -447,3 +447,34 @@ def test_http_fetcher_4xx_fails_fast_5xx_retries(monkeypatch):
     )(None)
     assert payload == {"features": []}
     assert sleeps == [0.5]  # one retry before success
+
+
+def test_file_fetcher_rejects_non_finite_numbers(tmp_path):
+    """`json` accepts NaN/Infinity tokens; GeoJSON numbers must be finite,
+    so a page holding one fails at the fetch, naming its offset."""
+    import pytest
+
+    (tmp_path / "page_4.json").write_text(
+        '{"features": [{"properties": {"id": "a"}, "geometry": '
+        '{"type": "Point", "coordinates": [1.0, NaN]}}], "next_offset": "None"}'
+    )
+    with pytest.raises(ValueError, match=r"offset '4' holds NaN: .*must be finite"):
+        file_fetcher(str(tmp_path))("4")
+
+
+def test_nan_coordinates_raise_instead_of_posting_a_string(spark):
+    """A NaN a caller puts in a feature dict raises at the hand-off to Spark
+    (and in the DataSource row builder) instead of reaching the sink as the
+    string "NaN"."""
+    import pytest
+
+    from etl_cotrip_signs_spark.sources.rest import feature_row
+
+    feat = {
+        "properties": {"id": "a"},
+        "geometry": {"type": "Point", "coordinates": [1.0, float("nan")]},
+    }
+    with pytest.raises(ValueError, match="not JSON compliant"):
+        geojson.features_to_df(spark, [feat])
+    with pytest.raises(ValueError, match="not JSON compliant"):
+        feature_row(feat)
