@@ -21,7 +21,6 @@ if _REPO_DIR not in sys.path:
     sys.path.insert(0, _REPO_DIR)
 
 from etl_cotrip_signs_spark import registry
-from etl_cotrip_signs_spark.session import ensure_confs
 
 registry.load_all()
 
@@ -32,7 +31,6 @@ def entry(spark: SparkSession) -> DataFrame:
     q5_regional_revenue: 5-table star join (broadcast dims) + agg — proves
     scan/join/agg/sort end-to-end in one plan.
     """
-    ensure_confs(spark)
     return registry.QUERIES["q5_regional_revenue"](spark, "/root/testdata/sf0.001")
 
 

@@ -14,8 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .session import ensure_confs
-
 TABLES = (
     "region",
     "nation",
@@ -38,7 +36,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     read dtype so either vintage of testdata lands on the same
     TIMESTAMP_NTZ micros column DuckDB sees.
     """
-    ensure_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = df.schema["ts"].dataType.typeName()

@@ -17,7 +17,7 @@ from ..io import load_table
 from ..registry import query
 from ..sinks.files import write_parquet
 from ..sources.readers import read_csv, read_jsonl
-from ..session import ensure_confs, scratch_dir
+from ..session import scratch_dir
 
 
 def _scratch(sf_dir: str, tag: str) -> str:
@@ -38,7 +38,6 @@ def csv_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV scan fidelity: nation → CSV (header'd) → explicit-schema read →
     aggregate. The oracle aggregates the original parquet, so a delimiter,
     quoting, or type mismatch in the CSV path flips the hash."""
-    ensure_confs(spark)
     path = _scratch(sf_dir, "nation_csv")
     src = load_table(spark, sf_dir, "nation")
     src.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
@@ -74,7 +73,6 @@ def bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables on the join key at ingest and every subsequent orderkey join is
     local. The oracle runs the same join over the plain parquet.
     """
-    ensure_confs(spark)
     base = _scratch(sf_dir, "bucketed")
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
@@ -119,7 +117,6 @@ def partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan touches only the two matching directories (pruning pinned in
     tests/test_io_formats.py). Exact DECIMAL sum guards value fidelity
     through the write/read cycle."""
-    ensure_confs(spark)
     path = _scratch(sf_dir, "orders_part")
     src = load_table(spark, sf_dir, "orders")
     write_parquet(src, path, partition_by=["o_orderpriority"])
@@ -151,7 +148,6 @@ def orc_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     column pruning work the same as parquet); the oracle aggregates the
     original parquet, so any type or value drift through the ORC cycle
     breaks the hash. Exact DECIMAL sum guards the money column."""
-    ensure_confs(spark)
     path = _scratch(sf_dir, "supplier_orc")
     src = load_table(spark, sf_dir, "supplier")
     src.write.mode("overwrite").orc(path)
@@ -179,7 +175,6 @@ def jsonl_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     permissive read (sources/readers.py::read_jsonl) → projection. The
     oracle projects the original parquet; a serialization or schema-drift
     bug in the JSONL path flips the hash."""
-    ensure_confs(spark)
     path = _scratch(sf_dir, "nation_jsonl")
     src = load_table(spark, sf_dir, "nation")
     src.coalesce(1).write.mode("overwrite").json(path)
@@ -228,7 +223,6 @@ def sort_within_partitions_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global Exchange an `orderBy` would cost."""
     import pandas as pd
 
-    ensure_confs(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.floor(F.col("o_custkey") / 100).cast("long").alias("bucket"),
@@ -290,7 +284,6 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schemas read as one table; mergeSchema reconciles footers at planning
     time (cost scales with file count, not data — for stable prod schemas,
     pin an explicit read schema instead)."""
-    ensure_confs(spark)
     path = _scratch(sf_dir, "nation_evolution")
     n = load_table(spark, sf_dir, "nation")
     v1 = n.filter(F.col("n_nationkey") < 10).select(
@@ -404,7 +397,6 @@ def layout_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the z-value (range exchange = contiguous z-intervals per file),
     write; the probe reads back, applies the box filter, and counts
     distinct input files. Output: one row per layout."""
-    ensure_confs(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     ).withColumn("od_day", F.datediff(F.col("o_orderdate"), F.lit("1992-01-01")))
@@ -521,7 +513,6 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    ensure_confs(spark)
     base = _scratch(sf_dir, "compaction")
     docs = load_table(spark, sf_dir, "documents")
     small = f"{base}/small"
@@ -731,7 +722,6 @@ def xml_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink format — the operator reads it once into columnar form, which is
     exactly the 100 TB pattern (parse at the edge, parquet everywhere
     after)."""
-    ensure_confs(spark)
     path = _scratch(sf_dir, "nation_xml")
     src = load_table(spark, sf_dir, "nation")
     (
@@ -786,7 +776,6 @@ def partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     late-arriving day/hour is restated without rewriting (or even
     listing) the other partitions. The conf is set for the second write
     only and restored in a finally (session-hygiene rule)."""
-    ensure_confs(spark)
     path = _scratch(sf_dir, "orders_dynover")
     src = load_table(spark, sf_dir, "orders")
     write_parquet(src, path, partition_by=["o_orderpriority"])
@@ -830,7 +819,6 @@ def parquet_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back and aggregated against the uncompressed source. Completes
     the format matrix: CSV/JSONL/XML text classes, ORC/parquet columnar,
     and now the codec axis within parquet."""
-    ensure_confs(spark)
     path = _scratch(sf_dir, "lineitem_zstd")
     src = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
@@ -886,7 +874,6 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     generations deterministic, so the staged directories are stable
     per sf_dir and the oracle can audit them independently.
     """
-    ensure_confs(spark)
     base = _scratch(sf_dir, "evolve")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1023,7 +1010,6 @@ def layout_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution stage reads each bin's files in one task — planning cost is
     O(|manifest|), never data-scale.
     """
-    ensure_confs(spark)
     groups = (
         load_table(spark, sf_dir, "documents")
         .groupBy("source", "lang")
@@ -1099,7 +1085,6 @@ def layout_encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-walking the same bytes with file_row_number proves both
     the position contract AND the layout claim.
     """
-    ensure_confs(spark)
     base = _scratch(sf_dir, "encaudit")
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 3 == 0

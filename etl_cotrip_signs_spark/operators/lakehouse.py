@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..registry import query
-from ..session import ensure_confs, scratch_dir
+from ..session import scratch_dir
 
 # Exact cents from the double price column: DECIMAL(18,2) cast is exact in
 # both engines (the relational.py agg idiom), then *100 to integer cents.
@@ -98,7 +98,6 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot reads are reproducible forever — which is what makes
     training corpora versionable.
     """
-    ensure_confs(spark)
     base = scratch_dir("timetravel", sf_dir)
     data_dir = f"{base}/data"
     os.makedirs(data_dir, exist_ok=True)
@@ -214,7 +213,6 @@ def deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine: DuckDB's file_row_number lands on the same physical
     rows as Spark's row_index.
     """
-    ensure_confs(spark)
     base = scratch_dir("delvec", sf_dir)
     data_dir = f"{base}/data"
 
@@ -295,7 +293,6 @@ def partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the union plan shows exactly that (each side keeps its own
     PartitionFilters).
     """
-    ensure_confs(spark)
     base = scratch_dir("partevo", sf_dir)
     o = (
         load_table(spark, sf_dir, "orders")
@@ -383,7 +380,6 @@ def table_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the clone operation itself touches |manifest| rows —
     pure metadata; reads plan only each table's live files.
     """
-    ensure_confs(spark)
     base = scratch_dir("clone", sf_dir)
     data_dir = f"{base}/data"
     os.makedirs(data_dir, exist_ok=True)
@@ -509,7 +505,6 @@ def table_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIDE deletability; the row counts here are an audit column the
     oracle independently recomputes from the bytes).
     """
-    ensure_confs(spark)
     base = scratch_dir("vacuumplan", sf_dir)
     data_dir = f"{base}/data"
     os.makedirs(data_dir, exist_ok=True)
@@ -639,7 +634,6 @@ def dq_schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema_evolution_merge / cdc pipelines fail fast instead of
     producing a corrupted union.
     """
-    ensure_confs(spark)
     base = scratch_dir("schemadrift", sf_dir)
     os.makedirs(base, exist_ok=True)
     o = load_table(spark, sf_dir, "orders").filter(

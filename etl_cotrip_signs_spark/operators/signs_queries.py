@@ -40,17 +40,14 @@ _INLINE_FEATURES = [
     ("me1", "MultiPoint", "[]"),
 ]
 
-_INLINE_VALUES_SQL = ",\n               ".join(
-    f"('{i}', '{t}', '{c}')" for i, t, c in _INLINE_FEATURES
+_INLINE_FEATURES_CTE = "features(id, geom_type, coordinates) AS (VALUES {})".format(
+    ",\n               ".join(f"('{i}', '{t}', '{c}')" for i, t, c in _INLINE_FEATURES)
 )
 
-
-@query(
-    "signs_pipeline_inline",
-    oracle=f"""
-    WITH features(id, geom_type, coordinates) AS (
-        VALUES {_INLINE_VALUES_SQL}
-    ),
+# A3 in DuckDB SQL, appended to a `features(id, geom_type, coordinates)` CTE:
+# a Multi geometry becomes one row per member with a positional `-i` id
+# suffix (zero rows for empty coordinates); other rows pass through.
+_EXPLODED_CTES = """
     multi AS (
         SELECT f.id || '-' || CAST(r.i AS VARCHAR)                  AS id,
                substr(f.geom_type, 6)                               AS geom_type,
@@ -66,9 +63,18 @@ _INLINE_VALUES_SQL = ",\n               ".join(
         WHERE NOT starts_with(geom_type, 'Multi')
     ),
     exploded AS (SELECT * FROM single UNION ALL SELECT * FROM multi)
+"""
+
+# A5: the default allow-list over the exploded rows.
+_ALLOWED_SELECT = """
     SELECT id, geom_type, coordinates FROM exploded
     WHERE geom_type IN ('Point', 'LineString', 'Polygon')
-    """,
+"""
+
+
+@query(
+    "signs_pipeline_inline",
+    oracle=f"WITH {_INLINE_FEATURES_CTE},{_EXPLODED_CTES}{_ALLOWED_SELECT}",
 )
 def signs_pipeline_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2→A3→A5 over an inline feature set, DuckDB-verified."""
@@ -102,26 +108,7 @@ _REST_PIPELINE_ORACLE = f"""
                CAST(json_extract(feat, '$.geometry.coordinates') AS VARCHAR)
                                                                       AS coordinates
         FROM pages
-    ),
-    multi AS (
-        SELECT f.id || '-' || CAST(r.i AS VARCHAR)                    AS id,
-               substr(f.geom_type, 6)                                 AS geom_type,
-               CAST(json_extract(f.coordinates, '$[' || r.i || ']') AS VARCHAR)
-                                                                      AS coordinates
-        FROM features f,
-             LATERAL (
-                 SELECT unnest(range(CAST(json_array_length(f.coordinates) AS BIGINT))) AS i
-             ) r
-        WHERE starts_with(f.geom_type, 'Multi')
-    ),
-    single AS (
-        SELECT id, geom_type, coordinates FROM features
-        WHERE NOT starts_with(geom_type, 'Multi')
-    ),
-    exploded AS (SELECT * FROM single UNION ALL SELECT * FROM multi)
-    SELECT id, geom_type, coordinates FROM exploded
-    WHERE geom_type IN ('Point', 'LineString', 'Polygon')
-"""
+    ),{_EXPLODED_CTES}{_ALLOWED_SELECT}"""
 
 
 @query("signs_rest_pipeline", oracle=_REST_PIPELINE_ORACLE)
@@ -161,26 +148,7 @@ def signs_rest_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same inline CTE as signs_pipeline_inline without the final allow-list
     # filter: A3 in isolation, so Multi→member rows (MultiPoint s4 → 3
     # Points) and the empty-coordinates zero-row case are hash-checked too.
-    oracle=f"""
-    WITH features(id, geom_type, coordinates) AS (
-        VALUES {_INLINE_VALUES_SQL}
-    ),
-    multi AS (
-        SELECT f.id || '-' || CAST(r.i AS VARCHAR)                  AS id,
-               substr(f.geom_type, 6)                               AS geom_type,
-               CAST(json_extract(f.coordinates, '$[' || r.i || ']') AS VARCHAR) AS coordinates
-        FROM features f,
-             LATERAL (
-                 SELECT unnest(range(CAST(json_array_length(f.coordinates) AS BIGINT))) AS i
-             ) r
-        WHERE starts_with(f.geom_type, 'Multi')
-    ),
-    single AS (
-        SELECT id, geom_type, coordinates FROM features
-        WHERE NOT starts_with(geom_type, 'Multi')
-    )
-    SELECT * FROM single UNION ALL SELECT * FROM multi
-    """,
+    oracle=f"WITH {_INLINE_FEATURES_CTE},{_EXPLODED_CTES} SELECT * FROM exploded",
 )
 def signs_explode_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 explode in isolation (incl. pass-through of non-Multi rows)."""
@@ -454,15 +422,7 @@ def signs_udtf_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.rest import file_fetcher, iter_pages, read_signs_udtf
 
     # offset discovery: follow the chain recording each page's offset
-    offsets: list[str | None] = []
-    offset: str | None = None
-    fetch = file_fetcher(_PAGES_DIR)
-    while True:
-        offsets.append(offset)
-        _, nxt = fetch(offset)
-        if nxt is None or nxt == "None":
-            break
-        offset = nxt
+    offsets = [offset for offset, _ in iter_pages(file_fetcher(_PAGES_DIR))]
     df = read_signs_udtf(spark, _PAGES_DIR, offsets)
     canonical = df.withColumn(
         "properties", F.lit(None).cast("map<string,string>")

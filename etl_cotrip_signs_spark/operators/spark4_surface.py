@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io import load_table
 from ..registry import query
-from ..session import ensure_confs
 
 
 @query(
@@ -414,7 +413,6 @@ def reshape_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (includeNulls=False), which is exactly what makes the round trip
     exact: absent cells were never rows in the long form either.
     """
-    ensure_confs(spark)
     weekly = (
         load_table(spark, sf_dir, "events")
         .selectExpr(
@@ -471,7 +469,6 @@ def sql_identifier_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     territory. The oracle is the equivalent static SQL, so the hash
     proves binding semantics change nothing about the result.
     """
-    ensure_confs(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "sg_param_orders"
     )

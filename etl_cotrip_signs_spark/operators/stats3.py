@@ -1013,8 +1013,10 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row_number() OVER (ORDER BY CASE WHEN den = 0 THEN 0"
         " ELSE CAST(num AS DOUBLE) / den END, b) AS rn",
     )
+    # No purchases means no replicate rows: n_users is 0 and every mean
+    # NULL, as in the oracle (nullif keeps ANSI DIV from raising on 0).
     return ranked.agg(
-        F.max("n_users").cast("long").alias("n_users"),
+        F.coalesce(F.max("n_users"), F.lit(0)).cast("long").alias("n_users"),
         F.max("sx").cast("long").alias("sx"),
         F.max(F.when(F.col("rn") == 4, F.expr("num DIV den")))
         .cast("long")
@@ -1024,7 +1026,7 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("hi_mean_milli"),
     ).selectExpr(
         "n_users",
-        "sx DIV n_users AS point_mean_milli",
+        "sx DIV nullif(n_users, 0) AS point_mean_milli",
         "lo_mean_milli",
         "hi_mean_milli",
     )

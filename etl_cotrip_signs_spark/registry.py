@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .session import ensure_confs
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -82,9 +84,11 @@ def assert_driver_safe_schema(schema: T.StructType, name: str) -> None:
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query (and optionally its DuckDB oracle SQL).
 
-    The registered callable validates its output schema on every call, so a
-    non-driver-safe shape fails loudly in pytest/bench long before the
-    driver's canonicalizer sees it.
+    The registered callable is the engine's session boundary: it applies
+    the required confs (:func:`session.ensure_confs`) to whatever session it
+    is handed, because the external driver builds its own. It also validates
+    its output schema on every call, so a non-driver-safe shape fails loudly
+    in pytest/bench long before the driver's canonicalizer sees it.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -92,6 +96,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
         @functools.wraps(fn)
         def checked(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_confs(spark)
             df = fn(spark, sf_dir)
             assert_driver_safe_schema(df.schema, name)
             return df

@@ -2,11 +2,17 @@
 
 The engine is designed for a multi-executor cluster (partition-count and
 broadcast decisions assume distributed execution) but is exercised locally
-on ``local[N]``. The confs in ``_RUNTIME_CONFS`` are runtime-settable, so
-the same tuning can be applied to an externally-provided session (the verify
-driver builds its own) via :func:`ensure_confs`. The generated-code cache
-size is static: only :func:`get_spark` applies it, on the builder, so a
-session built elsewhere keeps Spark's default of 100 entries.
+on ``local[N]``.
+
+Session policy has one boundary. The two confs in ``_RUNTIME_CONFS`` change
+results, so every session a query runs on must carry them: :func:`get_spark`
+puts them on its builder, and ``registry.query`` applies them with
+:func:`ensure_confs` to whatever session a registered query is handed (the
+external driver builds its own). Every other conf is the caller's: the
+engine does not restate Spark's defaults, so a caller that turns AQE or
+the runtime bloom filter off keeps it off. The generated-code cache size
+is static: only :func:`get_spark` applies it, on the builder, so a session
+built elsewhere keeps Spark's default of 100 entries.
 """
 
 from __future__ import annotations
@@ -15,26 +21,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# Runtime confs every query in this engine relies on. Applied defensively to
-# any session we are handed, because each is semantically load-bearing:
+# The runtime confs that change query results, and so are enforced on every
+# session (see the module docstring):
 #  - UTC session timezone: DuckDB oracle timestamps are UTC-naive.
 #  - nanosAsLong: the `events` table stores TIMESTAMP(NANOS), which Spark's
 #    parquet reader otherwise rejects (io.load_table converts to NTZ micros).
-#  - AQE + coalesce/skew: runtime re-planning is our skew/partition-count
-#    safety net at scale.
 _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Runtime bloom-filter semi-join reduction: a selective build side
-    # injects might_contain(bloom) into the probe scan, cutting shuffle
-    # input before the join — at 100 TB the probe side is the 100 TB, so
-    # this is the ship-a-filter-not-a-shuffle lever. Size thresholds stay
-    # at Spark defaults; tests/test_plans.py pins the injection fires on
-    # a selective fact-fact join (fixture thresholds lowered there).
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
 }
 
 
@@ -84,36 +78,24 @@ def codegen_compile_count(spark: SparkSession) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def ensure_confs(spark: SparkSession) -> SparkSession:
+def ensure_confs(spark: SparkSession) -> None:
     """Apply the engine's required runtime confs to an existing session."""
     for k, v in _RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Conf may be static on some builds; queries then rely on the
-            # session's existing value.
-            pass
-    return spark
+        spark.conf.set(k, v)
 
 
-def get_spark(
-    app_name: str = "etl-cotrip-signs-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "etl-cotrip-signs-spark") -> SparkSession:
     """Build (or fetch) a tuned SparkSession.
 
-    Shuffle partitions default to the local core count — on a real cluster
-    this should be ~2-3x total executor cores (set via
-    ``SPARK_GRAFT_CPUS`` / argument).
+    Shuffle partitions equal the local core count — on a real cluster this
+    should be ~2-3x total executor cores (set via ``SPARK_GRAFT_CPUS``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    shuffle = shuffle_partitions or cpus
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -123,7 +105,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return ensure_confs(spark)
+    return spark
 
 
 def scratch_dir(tag: str, sf_dir: str) -> str:

@@ -10,13 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from ..session import ensure_confs
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    ensure_confs(spark)
-    return spark.read.parquet(path)
-
 
 def read_csv(
     spark: SparkSession,
@@ -27,7 +20,6 @@ def read_csv(
 ) -> DataFrame:
     """CSV scan. Schema should be passed in production (inference = an
     extra full read); inference is allowed for exploration."""
-    ensure_confs(spark)
     reader = spark.read.option("header", str(header).lower()).option("sep", delimiter)
     if schema is not None:
         reader = reader.schema(schema)
@@ -43,7 +35,6 @@ def read_jsonl(
 ) -> DataFrame:
     """Newline-delimited JSON with an explicit schema; malformed rows land
     in `_corrupt_record` instead of failing the scan."""
-    ensure_confs(spark)
     return (
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")

@@ -118,14 +118,20 @@ def http_fetcher(
     return fetch
 
 
-def iter_pages(fetch: FetchFn) -> Iterator[dict[str, Any]]:
-    """Serial pagination: follow next-offset until absent or 'None'
-    (task.ts:64-72, including the literal-'None' sentinel)."""
+def _chain_ends(next_offset: str | None) -> bool:
+    """The end-of-chain rule (task.ts:64-72): the next-offset header is
+    absent or the literal string 'None'."""
+    return next_offset is None or next_offset == "None"
+
+
+def iter_pages(fetch: FetchFn) -> Iterator[tuple[str | None, dict[str, Any]]]:
+    """Serial pagination: ``(offset, payload)`` per page, following
+    next-offset until :func:`_chain_ends`."""
     offset: str | None = None
     while True:
         payload, next_offset = fetch(offset)
-        yield payload
-        if next_offset is None or next_offset == "None":
+        yield offset, payload
+        if _chain_ends(next_offset):
             return
         offset = next_offset
 
@@ -133,7 +139,7 @@ def iter_pages(fetch: FetchFn) -> Iterator[dict[str, Any]]:
 def fetch_all_features(fetch: FetchFn) -> list[dict[str, Any]]:
     """Concatenate the `features` arrays of every page (task.ts:71)."""
     features: list[dict[str, Any]] = []
-    for payload in iter_pages(fetch):
+    for _, payload in iter_pages(fetch):
         features.extend(payload.get("features", []))
     return features
 
@@ -224,8 +230,7 @@ class RestSignsStreamReader(SimpleDataSourceStreamReader):
     def _page_rows(self, page_offset: str):
         payload, next_off = options_fetcher(self.options)(page_offset or None)
         rows = [feature_row(feat) for feat in payload.get("features", [])]
-        done = next_off is None or next_off == "None"
-        return rows, (_STREAM_DONE if done else next_off)
+        return rows, (_STREAM_DONE if _chain_ends(next_off) else next_off)
 
     def read(self, start: dict):
         page = start["page"]

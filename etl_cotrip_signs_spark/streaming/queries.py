@@ -25,7 +25,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..io import load_table
 from ..operators.sketches2 import CMS_D, CMS_W
 from ..registry import query
-from ..session import ensure_confs
 
 # Explicit schema: ts is read as raw nanos (see io.load_table) because the
 # parquet column is TIMESTAMP(NANOS); streaming sources require an explicit
@@ -44,7 +43,6 @@ _EVENTS_RAW_SCHEMA = T.StructType(
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events.parquet` as a file-source stream with event-time `ts`."""
-    ensure_confs(spark)
     # The driver has shipped events.ts as TIMESTAMP(NANOS) (long under
     # nanosAsLong) and TIMESTAMP(MICROS); probe the footer via a batch read
     # so the stream's explicit schema matches whichever vintage is on disk.
@@ -494,7 +492,6 @@ def stream_partitioned_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..session import scratch_dir
 
-    ensure_confs(spark)
     base = scratch_dir("stream_sink", sf_dir)
     out_dir = f"{base}/data"
     ckpt_dir = f"{base}/ckpt"
@@ -556,7 +553,6 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (test_foreach_batch_upsert_replay_idempotent)."""
     from ..session import scratch_dir
 
-    ensure_confs(spark)
     e = read_events_stream(spark, sf_dir).select(
         "event_id", "ts", "user_id", "value"
     )
@@ -738,7 +734,6 @@ def stream_rocksdb_state_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lacks RocksDB (not expected on 3.2+), the query falls back to the
     default provider and still verifies the same oracle — the CORRECTNESS
     row then certifies values only, not the backend."""
-    ensure_confs(spark)
     key = "spark.sql.streaming.stateStore.providerClass"
     rocks = (
         "org.apache.spark.sql.execution.streaming."
@@ -807,7 +802,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same versioned-pointer protocol as run_foreach_batch_upsert."""
     from ..session import scratch_dir
 
-    ensure_confs(spark)
     stream = (
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
@@ -1273,7 +1267,6 @@ def stream_datasource_writer_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..session import scratch_dir
     from ..sinks.stream_jsonl import JsonlStreamSinkDataSource, committed_files
 
-    ensure_confs(spark)
     spark.dataSource.register(JsonlStreamSinkDataSource)
     base = scratch_dir("stream_ds_sink", sf_dir)
     out_dir = f"{base}/data"
@@ -1348,7 +1341,6 @@ def stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..session import scratch_dir
 
-    ensure_confs(spark)
     e = read_events_stream(spark, sf_dir).select("ts", "user_id")
     return run_stream_bitmap(e, scratch_dir("stream_bitmap", sf_dir))
 
@@ -1555,7 +1547,6 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..session import scratch_dir
 
-    ensure_confs(spark)
     e = read_events_stream(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     ).select("user_id", "ts", "event_id", "value")
@@ -1691,7 +1682,6 @@ def stream_minhash_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..session import scratch_dir
 
-    ensure_confs(spark)
     e = read_events_stream(spark, sf_dir).select("ts", "user_id")
     return run_stream_minhash(e, scratch_dir("stream_minhash", sf_dir))
 
@@ -1818,6 +1808,5 @@ def stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..session import scratch_dir
 
-    ensure_confs(spark)
     e = read_events_stream(spark, sf_dir).select("user_id")
     return run_stream_cms(e, scratch_dir("stream_cms", sf_dir))

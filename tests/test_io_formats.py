@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from etl_cotrip_signs_spark.io import load_table
 from etl_cotrip_signs_spark.operators.signs import signs_pipeline_observed
 from etl_cotrip_signs_spark.sinks.files import write_jsonl, write_parquet
-from etl_cotrip_signs_spark.sources.readers import read_csv, read_jsonl, read_parquet
+from etl_cotrip_signs_spark.sources.readers import read_csv, read_jsonl
 
 from .conftest import SF_SMALL
 
@@ -21,7 +21,7 @@ def test_partitioned_parquet_roundtrip_prunes(spark, tmp_path):
     # partition dirs exist
     dirs = {d for d in os.listdir(out) if d.startswith("o_orderpriority=")}
     assert len(dirs) >= 2
-    back = read_parquet(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == orders.count()
     # a filter on the partition column must prune to one directory
     one = back.filter(F.col("o_orderpriority") == back.select("o_orderpriority").first()[0])

@@ -14,7 +14,9 @@ the (expensive) upstream derivation. ``dedup_ngram_jaccard`` went 3.4s →
    the correct default here).
 
 A third lint keeps tuning knobs out of the operators: no environment
-reads under ``operators/`` or ``functions/``.
+reads under ``operators/`` or ``functions/``. A fourth keeps session policy
+at one boundary: only ``session.py`` (the definition) and ``registry.py``
+(the one call, in every registered query) mention ``ensure_confs``.
 """
 
 from __future__ import annotations
@@ -53,6 +55,18 @@ def test_no_environment_knobs_in_operators_or_functions():
         if pat.search(p.read_text(encoding="utf-8"))
     ]
     assert offenders == [], f"environment reads at: {offenders}"
+
+
+def test_session_confs_applied_only_at_the_registry():
+    """Policy lint: ``ensure_confs`` is defined in ``session.py`` and called
+    only by ``registry.query``'s wrapper; no loader or operator re-applies
+    session confs (which would override a caller's own settings)."""
+    mentions = sorted(
+        str(p.relative_to(PKG))
+        for p in PKG.rglob("*.py")
+        if "ensure_confs" in p.read_text(encoding="utf-8")
+    )
+    assert mentions == ["registry.py", "session.py"], mentions
 
 
 def test_eager_checkpoint_single_materialization(spark):

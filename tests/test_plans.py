@@ -140,8 +140,8 @@ def test_range_join_banded_is_equi_not_bnlj(spark):
 
 
 def test_aqe_splits_skewed_join_partitions(spark):
-    """A hot join key triggers AQE's OptimizeSkewedJoin under the engine's
-    session confs (thresholds lowered to fixture scale): the executed plan
+    """A hot join key triggers AQE's OptimizeSkewedJoin under Spark's
+    default AQE confs (thresholds lowered to fixture scale): the executed plan
     marks the sort-merge join skew=true. This is the runtime half of the
     skew story — salting (agg_salted_skew) is the planned half."""
     confs = {

@@ -7,10 +7,14 @@ oracle = second engine, these = third formulation)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
+from etl_cotrip_signs_spark import registry
 from etl_cotrip_signs_spark.functions.xxh64_ref import xxh64
 from etl_cotrip_signs_spark.functions.xxh64_sql import chain_seed
 from etl_cotrip_signs_spark.operators.stats3 import (
@@ -21,6 +25,7 @@ from etl_cotrip_signs_spark.operators.stats3 import (
 )
 
 from .conftest import SF_SMALL
+from .oracle_compare import compare, run_oracle
 
 
 @pytest.fixture(scope="module")
@@ -213,3 +218,18 @@ def test_anova_oneway_matches_direct_moments(spark, events_pdf):
     f = (ssb / (k - 1)) / (ssw / (n - k))
     assert abs(row["f_stat"] - f) < 1e-6 * max(1.0, abs(f))
     assert abs(row["eta_squared"] - ssb / (ssb + ssw)) < 1e-9
+
+
+def test_bootstrap_ci_without_purchases_matches_oracle(spark, tmp_path):
+    """An events table with no purchase rows: n_users is 0 and the means
+    NULL on both engines, and ANSI DIV by n_users = 0 does not raise."""
+    for t in os.listdir(SF_SMALL):
+        if t != "events.parquet":
+            os.symlink(f"{SF_SMALL}/{t}", tmp_path / t)
+    events = pq.read_table(f"{SF_SMALL}/events.parquet")
+    pq.write_table(events.slice(0, 0), tmp_path / "events.parquet")
+    sf_dir = str(tmp_path)
+    df = registry.QUERIES["stat_bootstrap_ci"](spark, sf_dir)
+    oracle = run_oracle(registry.oracle_for("stat_bootstrap_ci", sf_dir), sf_dir)
+    assert oracle["n_users"].tolist() == [0]
+    assert compare(df, oracle) == []
